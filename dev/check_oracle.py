@@ -17,6 +17,11 @@ for p in glob.glob(f"{sf_dir}/*.parquet"):
     con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
 
 oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
+if not oracle:
+    # nothing to compare is a failed check, not a pass
+    print(f"EMPTY {out_dir}/oracle_sql.json: no oracle entries")
+    print("FAILURES: 1")
+    sys.exit(1)
 fails = 0
 for name, sql in sorted(oracle.items()):
     res_dir = f"{out_dir}/{name}"

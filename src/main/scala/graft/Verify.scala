@@ -64,6 +64,12 @@ object Verify {
     case (x, y) => x == y
   }
 
+  /** Names in the optional comma-list that no registered query has. A
+    * mistyped name would otherwise dump nothing and leave its oracle
+    * out of oracle_sql.json, so the checker would pass without it. */
+  private[graft] def unknownQueries(only: Option[Set[String]]): Seq[String] =
+    only.fold(Seq.empty[String])(o => (o -- SparkEntry.queries.keySet).toSeq.sorted)
+
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args.take(2)
     // optional 3rd arg (local dev only; the driver passes 2): comma-list
@@ -73,6 +79,11 @@ object Verify {
     val sqlOnly = args.drop(2).headOption.contains("--sql-only")
     val only: Option[Set[String]] =
       args.drop(2).headOption.filterNot(_ == "--sql-only").map(_.split(',').toSet)
+    val unknown = unknownQueries(only)
+    if (unknown.nonEmpty) {
+      System.err.println(s"[verify] unknown query names: ${unknown.mkString(", ")}")
+      sys.exit(2)
+    }
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")

@@ -10,35 +10,32 @@ import graft.functions.TextFunctions._
 /** Model-based quality scoring — the CCNet-style layer between the
   * rule filters (TextAnalysis.textQuality) and near-dup dedup: score
   * each document by a language model trained on the corpus itself and
-  * gate on the score distribution. Two operators:
+  * gate on the score distribution. The families here:
   *
-  *  - lmSurprisal: unigram-LM cross-entropy per document (the
-  *    perplexity-proxy CCNet uses KenLM for, at unigram order so the
-  *    model is an aggregatable table instead of an external artifact).
-  *  - qualityFloorPerSource: keep the best `keepFrac` of each source
-  *    by a quality score — the per-domain percentile gate that stops a
-  *    single boilerplate-heavy domain from flooding the mixture.
+  *  - unigram and add-1 bigram surprisal (lmSurprisal, bigramSurprisal,
+  *    lmHeldoutEval, pplBuckets), the model a broadcast map row or a
+  *    keyed join;
+  *  - the Kneser-Ney ladder over orders 2..5 (knSurprisal, knHeldout,
+  *    knPruneCurve, pplHistogram), keyed joins end to end;
+  *  - rule and score gates (qualityFloorPerSource, gopherRules,
+  *    dsirImportance) and vocabulary drift (vocabKlDrift);
+  *  - the quality classifier and its evaluation (qualityLogreg,
+  *    qualityTrain, scoreAucEval, qualityCalibration,
+  *    scorePercentileNorm).
   *
   * Cross-engine exactness: surprisal is fixed-point micro-nats (the
-  * only transcendental, ln, is rounded ONCE per vocab type to 1e-6
-  * before any summation), the floor score is integer basis points —
-  * both sum/compare as BIGINTs with no float-order caveat.
+  * only transcendental, ln, is rounded ONCE per type or position to
+  * 1e-6 before any summation), the floor score is integer basis
+  * points — both sum/compare as BIGINTs with no float-order caveat.
   */
 object QualityModels {
 
-  /** Native n-gram field kernels (graft.functions.NgramSubstr) — the
-    * prefix/suffix/token extraction under every KN model build and
-    * scorer. Bit-identical to the split/concat_ws forms they replaced
-    * (NgramSubstrSpec pins parity): split is a per-row regex split
-    * allocating a token array per CALL, and the model builds called it
-    * up to six times per row on count frames with millions of n-gram
-    * types; these are one byte scan + one slice copy each. */
+  /** Native n-gram field kernel (graft.functions.NgramSubstr): the
+    * i-th token of a space-joined n-gram, one byte scan instead of a
+    * regex split per call (NgramSubstrSpec pins parity with
+    * split(ng, " ").getItem(i)). */
   private def ngTok(c: Column, i: Int): Column =
     graft.functions.NgramToken(c, i)
-  private def ngHead(c: Column, m: Int): Column =
-    graft.functions.NgramSlice(c, 0, m)
-  private def ngTail(c: Column, m: Int): Column =
-    graft.functions.NgramSlice(c, 1, m)
 
   /** Broadcast-model-row contract for every one-map-row scorer
     * (lm_surprisal, bigram_surprisal, lm_heldout_eval): the whole
@@ -443,453 +440,372 @@ object QualityModels {
   def bigramSurprisalQuery(spark: SparkSession, dir: String): DataFrame =
     bigramSurprisal(Tables.documents(spark, dir)).orderBy(col("doc_id"))
 
-  /** Interpolated ABSOLUTE-DISCOUNT backoff bigram LM (the Kneser-Ney
-    * direction; Chen & Goodman 1999 §2.7) — r13 verdict #4: add-1
-    * steals far too much mass from seen bigrams (every unseen
-    * continuation gets a full pseudo-count, so on real text the model
-    * over-penalizes fluent-but-rare continuations; CCNet's actual
-    * gate is a KenLM model built on exactly this smoothing family).
-    * Per seen bigram (t1 t2), with discount D = 3/4 as an EXACT
-    * rational:
+  // ------------------------------------------------------ Kneser-Ney ladder
+
+  /** Interpolated absolute discounting with Kneser-Ney lower orders
+    * (Chen & Goodman, "An Empirical Study of Smoothing Techniques for
+    * Language Modeling", TR-10-98), as ONE ladder over the order
+    * n ∈ 2..5. An n-gram position (t₁ … tₙ) scores as one exact int64
+    * rational num/den; the discount D = 3/4 stays exact because every
+    * level scales by 4. Level k reads the position's last k tokens:
     *
-    *   p(t2|t1) = (c12 − D)/c1 + D·T1/c1 · p_uni(t2)
-    *   p_uni(t2) = (u2 + 1)/(N + V)   (add-1 unigram backstop)
+    *  - level 1: (num₁, den₁) = (cont+1, B+V), where cont counts the
+    *    distinct left contexts of tₙ over bigram types, B is the number
+    *    of bigram types and V the number of token types. The in-corpus
+    *    order-2 scorer and the `backoff` model of the order-2 held-out
+    *    comparison use the raw unigram count instead: (u+1, N+V), with
+    *    N the token count.
+    *  - level k ≥ 2, context seen:
+    *      den_k = 4·C·den_{k−1}
+    *      num_k = max(4·c−3, 0)·den_{k−1} + 3·T·num_{k−1}
+    *    c is the k-gram's count (0 when unseen or pruned); C and T are
+    *    its (k−1)-token context's total count and type count over the
+    *    kept k-grams.
+    *  - level k ≥ 2, context unseen: (num_k, den_k) = (num_{k−1}, den_{k−1}).
     *
-    * where c1 = t1's prefix occurrences, T1 = its distinct
-    * continuation types (the interpolation weight D·T1/c1 is exactly
-    * the mass discounting freed), u2 = t2's unigram count, N/V =
-    * token/type totals. The whole probability is ONE rational:
-    *   num = (4·c12 − 3)·(N + V) + 3·T1·(u2 + 1),  den = 4·c1·(N + V)
-    * and the per-TYPE surprisal rounds ONCE to micro-nats as
-    * round((ln(den) − ln(num))·10⁶) — two ln of exact integers in
-    * pinned order (the row-162 discipline; exact-integer ln args stay
-    * below 2⁵³ for corpora to ~5·10⁷ tokens — beyond that the same
-    * 1-ulp libm caveat as the rest of the ln family applies).
+    * Count sources. Level 2 reads continuation counts from the trigram
+    * table when n ≥ 3 (c = distinct left contexts of t_{n−1}tₙ; C and T
+    * over the trigram types with middle t_{n−1}) and raw bigram counts
+    * when n = 2. Every level ≥ 3 reads raw counts. Levels 4 and 5 keep
+    * only the k-grams with c ≥ θ_k (`minCount4`, `minCount5`) and
+    * recompute C and T over the kept set, KenLM's rule (Heafield et
+    * al., "Scalable Modified Kneser-Ney Language Model Estimation",
+    * ACL 2013): a pruned k-gram scores through the interpolation
+    * weight alone, and a context with no kept k-gram passes through.
     *
-    * Scale shape — the TRIGRAM ladder's, one order down (r17 verdict
-    * #1: the old whole-model `map_from_entries(collect_list)` →
-    * broadcast fold was this repo's one registered 100-TB
-    * scale-killer — a bigram TYPE table is effectively unbounded on
-    * web corpora, so collapsing it into one driver-sized map row is
-    * an OOM at scale and was GC-hypersensitive already at sf0.1):
-    * three vocab-sized map-side-combined aggregates (bigram, prefix,
-    * unigram) build a per-TYPE model FRAME, the exploded doc-bigram
-    * stream equi-joins it on `bg` (inner — every doc bigram is a seen
-    * type by construction), and ONE per-doc aggregate collapses it.
-    * Every stage is keyed and map-side-combinable; nothing
-    * model-sized crosses a driver or a broadcast. Docs with < 2
-    * tokens carry 0/NULL via the left join back (no evidence). */
-  def bigramSurprisalKn(docs: DataFrame): DataFrame = {
-    val bigs = docs.select(
-      explode(wordShingles(tokens(col("text")), 2)).as("bg"))
-    // bcnt feeds pstats AND the model select; ucnt feeds tot AND the
-    // model join — checkpoint each so the corpus is scanned once per
-    // count frame (the trigramModelFrames discipline)
-    val bcnt = bigs.groupBy("bg").agg(count(lit(1)).as("cnt"))
-      .localCheckpoint()
-    val pstats = bcnt
-      .groupBy(ngTok(col("bg"), 0).as("t1"))
-      .agg(sum(col("cnt")).as("pcnt"), count(lit(1)).as("t1types"))
-    val ucnt = docs.select(explode(tokens(col("text"))).as("t"))
-      .groupBy("t").agg(count(lit(1)).as("u"))
-      .localCheckpoint()
-    val tot = ucnt.agg(sum(col("u")).as("n_tok"),
-      count(lit(1)).as("v"))
-    val smodel = bcnt
-      .withColumn("t1", ngTok(col("bg"), 0))
-      .withColumn("t2", ngTok(col("bg"), 1))
-      .join(pstats, "t1")
-      .join(ucnt, col("t2") === col("t"))
-      .crossJoin(broadcast(tot))
-      .select(col("bg"),
-        round((log(lit(4L) * col("pcnt") * (col("n_tok") + col("v")))
-          - log((lit(4L) * col("cnt") - 3) * (col("n_tok") + col("v"))
-            + lit(3L) * col("t1types") * (col("u") + 1)))
-          * lit(1000000.0d)).cast("long").as("s"))
+    * A position scores round((ln(den) − ln(num))·10⁶) micro-nats,
+    * rounded once per row with the operands in that order, so both
+    * engines take the logarithm of the same two integers.
+    *
+    * Integer bounds. num ≤ den on every branch (each level is a
+    * probability) and den ≤ 4ⁿ⁻¹·C_n·…·C₂·base, so [[knGuard]] fails
+    * the query once that context product reaches 5.7e17 (n = 3),
+    * 1.4e17 (n = 4) or 3.5e16 (n = 5), each just under 2⁶³/4ⁿ⁻¹.
+    * Spark runs with ANSI arithmetic, so an int64 overflow would raise
+    * ARITHMETIC_OVERFLOW anyway; the guard adds the query's name and
+    * the remedy: rescale the rational by the level-1 base and round
+    * once more. Measured at sf0.1, den peaks near 1.4e12 (n = 5).
+    *
+    * Scale shape. Every k-gram count frame is one map-side-combined
+    * keyed aggregate over the corpus, checkpointed once and shared by
+    * all levels that read it; context and continuation stats are
+    * aggregates over those checkpoints. Scoring left-joins each level's
+    * tables on slices of the position key — no model table broadcasts,
+    * only the 1-row (B, V) or (N, V) scalars do. The in-corpus scorer
+    * rates every seen n-gram type once and joins the exploded doc
+    * stream to those types; the held-out scorer joins the split-tagged
+    * position stream directly. */
+  private val knNames =
+    Map(2 -> "bigram", 3 -> "trigram", 4 -> "quadgram", 5 -> "fivegram")
+
+  /** The int64 bound on each order's context product (see above). */
+  private val knBounds = Map(3 -> 5.7e17d, 4 -> 1.4e17d, 5 -> 3.5e16d)
+
+  /** Field `from` of an n-gram string, or the `len`-field slice there. */
+  private def ngPart(g: Column, from: Int, len: Int): Column =
+    if (len == 1) ngTok(g, from) else graft.functions.NgramSlice(g, from, len)
+
+  /** Level k ≥ 2 under column tag `tag`: `counts` is (k_tag, c_tag)
+    * keyed by the level's k-gram, `ctx` is (p_tag, cx_tag = C,
+    * tx_tag = T) keyed by its (k−1)-token context. `theta` is the
+    * pruning threshold already applied to `counts`. */
+  private final case class KnRung(tag: String, k: Int, theta: Option[Long],
+      counts: DataFrame, ctx: DataFrame) {
+    def c: Column = col(s"c_$tag")
+    def cx: Column = col(s"cx_$tag")
+    def tx: Column = col(s"tx_$tag")
+  }
+
+  /** Level 1 under column tag `tag`: `values` is (t_tag, x_tag) keyed
+    * by tₙ, and `base` reads the 1-row `scalars`. */
+  private final case class KnFloor(tag: String, values: DataFrame,
+      scalars: Seq[DataFrame], base: Column) {
+    def x: Column = col(s"x_$tag")
+  }
+
+  /** The ladder's tables over one (possibly split-filtered) corpus,
+    * each built on first use. `order` is the highest order scored. */
+  private final class KnModel(corpus: DataFrame, order: Int,
+      minCount4: Long, minCount5: Long) {
+    require(order >= 2 && order <= 5, s"KN order must be in 2..5, got $order")
+    require(minCount4 >= 1 && minCount5 >= 1)
+
+    private val grams = scala.collection.mutable.Map.empty[Int, DataFrame]
+    /** k-gram counts (g, c); k = 1 is the unigram table. */
+    def counts(k: Int): DataFrame = grams.getOrElseUpdate(k, {
+      val toks = tokens(col("text"))
+      corpus
+        .select(explode(if (k == 1) toks else wordShingles(toks, k)).as("g"))
+        .groupBy("g").agg(count(lit(1)).as("c"))
+        .localCheckpoint()
+    })
+
+    private def rung(tag: String, k: Int, theta: Option[Long],
+        kc: DataFrame): KnRung =
+      KnRung(tag, k, theta,
+        kc.select(col("g").as(s"k_$tag"), col("c").as(s"c_$tag")),
+        kc.groupBy(ngPart(col("g"), 0, k - 1).as(s"p_$tag"))
+          .agg(sum(col("c")).as(s"cx_$tag"), count(lit(1)).as(s"tx_$tag")))
+
+    private val rungs =
+      scala.collection.mutable.Map.empty[(Int, Option[Long]), KnRung]
+    /** Level k from raw counts, keeping c ≥ θ when `theta` is set. */
+    def raw(k: Int, theta: Option[Long]): KnRung =
+      rungs.getOrElseUpdate((k, theta), rung(
+        theta.fold(s"r$k")(th => s"r${k}t$th"), k, theta,
+        theta.fold(counts(k))(th => counts(k).filter(col("c") >= th))))
+
+    /** Level 2 from continuation counts in the trigram table. */
+    lazy val middle: KnRung = rung("m2", 2, None, counts(3)
+      .groupBy(ngPart(col("g"), 1, 2).as("g")).agg(count(lit(1)).as("c")))
+
+    /** Levels 2..n of the order-n ladder. */
+    def ladder(n: Int): Seq[KnRung] =
+      if (n == 2) Seq(raw(2, None))
+      else middle +: (3 to n).map(k => raw(k,
+        if (k == 4) Some(minCount4) else if (k == 5) Some(minCount5) else None))
+
+    // order 2 reads V off the unigram table it builds anyway; higher
+    // orders count distinct tokens in the final plan instead of
+    // checkpointing a unigram table for one number
+    private lazy val vocab: DataFrame =
+      if (order == 2)
+        counts(1).agg(sum(col("c")).as("n_tok"), count(lit(1)).as("v"))
+      else corpus.select(explode(tokens(col("text"))).as("t"))
+        .agg(countDistinct(col("t")).as("v"))
+
+    /** (u+1, N+V): the raw unigram floor of the order-2 scorers. */
+    lazy val unigram: KnFloor = {
+      require(order == 2, "the raw unigram floor is order 2's")
+      KnFloor("u", counts(1).select(col("g").as("t_u"), col("c").as("x_u")),
+        Seq(vocab), col("n_tok") + col("v"))
+    }
+
+    /** (cont+1, B+V): the continuation floor. */
+    lazy val continuation: KnFloor = KnFloor("c",
+      counts(2).groupBy(ngTok(col("g"), 1).as("t_c"))
+        .agg(count(lit(1)).as("x_c")),
+      Seq(counts(2).agg(count(lit(1)).as("b")), vocab), col("b") + col("v"))
+
+    /** Left-joins the tables of `rs` and `floors` onto `frame`, whose
+      * `g` column is an n-gram position. `own` are the rungs whose
+      * counts `frame` already carries. */
+    def attach(frame: DataFrame, n: Int, rs: Seq[KnRung],
+        floors: Seq[KnFloor], own: Seq[KnRung] = Nil): DataFrame = {
+      val g = col("g")
+      val withRungs = rs.distinct.foldLeft(frame) { (df, r) =>
+        val counted =
+          if (own.contains(r)) df
+          else df.join(r.counts,
+            (if (r.k == n) g else ngPart(g, n - r.k, r.k)) === col(s"k_${r.tag}"),
+            "left")
+        counted.join(r.ctx,
+          ngPart(g, n - r.k, r.k - 1) === col(s"p_${r.tag}"), "left")
+      }
+      val withFloors = floors.foldLeft(withRungs) { (df, f) =>
+        df.join(f.values, ngTok(g, n - 1) === col(s"t_${f.tag}"), "left")
+      }
+      floors.flatMap(_.scalars).distinct
+        .foldLeft(withFloors)((df, s) => df.crossJoin(broadcast(s)))
+    }
+  }
+
+  /** (den, num) of the ladder `floor` + `rungs` (levels 1..n) over
+    * columns [[KnModel.attach]] joined. */
+  private def knRational(floor: KnFloor,
+      rungs: Seq[KnRung]): (Column, Column) =
+    rungs.foldLeft((floor.base, coalesce(floor.x, lit(0L)) + 1)) {
+      case ((den, num), r) =>
+        val seen = r.cx.isNotNull
+        (when(seen, lit(4L) * r.cx * den).otherwise(den),
+          when(seen, greatest(lit(4L) * coalesce(r.c, lit(0L)) - 3, lit(0L))
+            * den + lit(3L) * r.tx * num).otherwise(num))
+    }
+
+  /** One position's micro-nats on the ladder `floor` + `rungs`, under
+    * the int64 guard of its order. */
+  private def knMicro(what: String, floor: KnFloor,
+      rungs: Seq[KnRung]): Column = {
+    val (den, num) = knRational(floor, rungs)
+    knGuard(what, rungs.size + 1,
+      rungs.reverse.map(r => coalesce(r.cx, lit(1L))) :+ floor.base,
+      round((log(den) - log(num)) * lit(1000000.0d))).cast("long")
+  }
+
+  /** The int64 guard of an order-n rational: `s` unchanged while the
+    * context product Π factors stays under the order's bound, else a
+    * raised error naming `what`, the order and the remedy. Orders
+    * without a bound (n = 2) pass `s` through. */
+  private[graft] def knGuard(what: String, n: Int, factors: Seq[Column],
+      s: Column): Column =
+    knBounds.get(n).fold(s) { bound =>
+      val product = factors.map(_.cast("double")).reduce(_ * _)
+      when(product >= lit(bound), raise_error(concat(
+        lit(s"$what: order-$n KN context product "), product.cast("string"),
+        lit(s" >= $bound overflows the exact int64 rational — rescale " +
+          "it (divide both sides by the level-1 base, round once more) " +
+          "before corpora this size"))))
+        .otherwise(s)
+    }
+
+  /** Every seen type of the top order → (g, c, s0, s1, …): its raw
+    * count and its micro-nats under each of `tops` (one pruning
+    * threshold each) stacked on the shared `lower` levels. */
+  private def knTypeScores(m: KnModel, floor: KnFloor, lower: Seq[KnRung],
+      tops: Seq[KnRung], what: String): DataFrame = {
+    val n = lower.size + 2
+    val types = m.counts(n).select(col("g") +: col("c") +: tops.map(t =>
+      t.theta.fold(col("c"))(th => when(col("c") >= th, col("c")))
+        .as(s"c_${t.tag}")): _*)
+    m.attach(types, n, lower ++ tops, Seq(floor), tops)
+      .select(col("g") +: col("c") +: tops.zipWithIndex.map { case (t, i) =>
+        knMicro(what, floor, lower :+ t).as(s"s$i") }: _*)
+  }
+
+  /** Per-document order-n KN cross-entropy: (doc_id, n_<n-grams>,
+    * surprisal_micro, mean_micro) over the corpus's own model. Docs
+    * shorter than n tokens carry 0 and a NULL mean (no evidence). */
+  def knSurprisal(docs: DataFrame, order: Int, minCount4: Long = 2L,
+                  minCount5: Long = 2L): DataFrame = {
+    val m = new KnModel(docs, order, minCount4, minCount5)
+    val floor = if (order == 2) m.unigram else m.continuation
+    val rungs = m.ladder(order)
+    val types = knTypeScores(m, floor, rungs.init, Seq(rungs.last),
+      s"${knNames(order)}_surprisal_kn")
+    val nCol = s"n_${knNames(order)}s"
     val perDoc = docs
       .select(col("doc_id"),
-        explode(wordShingles(tokens(col("text")), 2)).as("bg"))
-      .join(smodel, "bg")
+        explode(wordShingles(tokens(col("text")), order)).as("g"))
+      .join(types, "g")
       .groupBy("doc_id")
-      .agg(count(lit(1)).as("n_bigrams"),
-        sum(col("s")).as("surprisal_micro"))
+      .agg(count(lit(1)).as(nCol), sum(col("s0")).as("surprisal_micro"))
     docs.select(col("doc_id")).join(perDoc, Seq("doc_id"), "left")
       .select(col("doc_id"),
-        coalesce(col("n_bigrams"), lit(0L)).as("n_bigrams"),
+        coalesce(col(nCol), lit(0L)).as(nCol),
         coalesce(col("surprisal_micro"), lit(0L)).as("surprisal_micro"),
-        when(coalesce(col("n_bigrams"), lit(0L)) > 0,
-          expr("surprisal_micro div n_bigrams")).as("mean_micro"))
+        when(coalesce(col(nCol), lit(0L)) > 0,
+          expr(s"surprisal_micro div $nCol")).as("mean_micro"))
+  }
+
+  /** Held-out comparison of two orders on the SAME order-n positions:
+    * the models train on the md5 train split, every split is scored,
+    * and each (model, split) row reports n_<n-grams>, unseen_<n-grams>
+    * (positions the top order's kept model misses) and mean_micro.
+    * Order n ≥ 3 compares kn_<n−1> (its ladder on the position's last
+    * n−1 tokens) with kn_<n>. Order 2 compares add-1
+    * (ln(c1+V) − ln(c12+1)), `backoff` (the raw unigram floor) and
+    * kn_cont (the continuation floor). */
+  def knHeldout(docs: DataFrame, order: Int, minCount4: Long = 2L,
+                minCount5: Long = 2L, trainPct: Int = 80,
+                valPct: Int = 10): DataFrame = {
+    val tagged = docs.select(col("doc_id"), col("text"),
+      TextAnalysis.holdoutSplitCol(trainPct, valPct).as("split"))
+    val m = new KnModel(tagged.filter(col("split") === "train"), order,
+      minCount4, minCount5)
+    val what = s"lm_heldout_${knNames(order)}"
+    val top = m.ladder(order)
+    val (lower, floors) =
+      if (order == 2) (Nil, Seq(m.unigram, m.continuation))
+      else (m.ladder(order - 1), Seq(m.continuation))
+    val legs =
+      if (order == 2) Seq(
+        "add1" -> round((log(coalesce(top.head.cx, lit(0L)) + col("v"))
+          - log(coalesce(top.head.c, lit(0L)) + 1))
+          * lit(1000000.0d)).cast("long"),
+        "backoff" -> knMicro(what, m.unigram, top),
+        "kn_cont" -> knMicro(what, m.continuation, top))
+      else Seq(
+        s"kn_${knNames(order - 1)}" -> knMicro(what, m.continuation, lower),
+        s"kn_${knNames(order)}" -> knMicro(what, m.continuation, top))
+    val positions = tagged.select(col("split"),
+      explode(wordShingles(tokens(col("text")), order)).as("g"))
+    val nCol = s"n_${knNames(order)}s"
+    val uCol = s"unseen_${knNames(order)}s"
+    val agg = m.attach(positions, order, lower ++ top, floors)
+      .select(col("split") +: top.last.c.isNull.as("unseen") +:
+        legs.zipWithIndex.map { case ((_, s), i) => s.as(s"s$i") }: _*)
+      .groupBy("split")
+      .agg(count(lit(1)).as(nCol),
+        sum(when(col("unseen"), 1L).otherwise(0L)).as(uCol) +:
+          legs.indices.map(i => sum(col(s"s$i")).as(s"sum$i")): _*)
+    legs.zipWithIndex.map { case ((model, _), i) =>
+      agg.select(lit(model).as("model"), col("split"), col(nCol), col(uCol),
+        expr(s"sum$i div $nCol").as("mean_micro"))
+    }.reduce(_.unionByName(_))
   }
 
   def bigramSurprisalKnQuery(spark: SparkSession, dir: String): DataFrame =
-    bigramSurprisalKn(Tables.documents(spark, dir)).orderBy(col("doc_id"))
-
-  /** Held-out add-1 vs absolute-discount-backoff vs KNESER-NEY bigram
-    * comparison — lm_heldout_eval's train/test discipline pointed at
-    * the SMOOTHER (r13 verdict #4's "Done" clause): the three models
-    * train on the md5 TRAIN split only, every split is scored by all,
-    * and the test-split mean is the measured answer to "does backoff
-    * beat add-1 where it matters — on data the model has not seen?"
-    * (In-corpus scoring can't show this: every bigram is seen there.)
-    *
-    * Fallback ladder per scored bigram, one formula per model:
-    *   add-1:  s = ln(c1 + V) − ln(c12 + 1)            (c1, c12 ⟂ 0)
-    *   backoff, t1 seen:   num = max(4·c12−3, 0)·(N+V) + 3·T1·(u2+1),
-    *                       den = 4·c1·(N+V)
-    *   backoff, t1 unseen: num = u2 + 1, den = N + V   (pure unigram)
-    *   kn_cont: the same discounted interpolation with the TRUE
-    *     Kneser-Ney lower-order distribution (Kneser & Ney 1995) —
-    *     the CONTINUATION probability (cont2 + 1)/(B + V), cont2 =
-    *     distinct left-contexts of t2, B = distinct bigram types: a
-    *     word frequent only inside one collocation ("francisco")
-    *     backs off LOW however high its raw count, which is the whole
-    *     point of KN over plain absolute discounting —
-    *     num = max(4·c12−3, 0)·(B+V) + 3·T1·(cont2+1), den = 4·c1·(B+V)
-    *     (t1 unseen: num = cont2 + 1, den = B + V)
-    * rounded once to micro-nats per ROW in pinned ln order — unseen
-    * pairs share inputs, so identical rows round identically in both
-    * engines.
-    *
-    * Scale shape: the scoring side EXPLODES the split-tagged bigram
-    * stream and left-joins the four vocab-sized model tables (bigram,
-    * prefix, unigram, continuation) on their keys — all map-side-
-    * combinable keyed equi-joins, no broadcast map needed — then ONE
-    * 9-row aggregate. */
-  def lmHeldoutBigram(docs: DataFrame, trainPct: Int = 80,
-                      valPct: Int = 10): DataFrame = {
-    require(trainPct > 0 && valPct >= 0 && trainPct + valPct <= 100)
-    val trainT = 4294967296L * trainPct / 100
-    val valT = 4294967296L * (trainPct + valPct) / 100
-    val tagged = docs.select(col("doc_id"), col("text"),
-      when(TextAnalysis.sampleBucket < trainT, "train")
-        .when(TextAnalysis.sampleBucket < valT, "val")
-        .otherwise("test").as("split"))
-    val train = tagged.filter(col("split") === "train")
-    // bcnt feeds pstats, cstats, btot AND the scored-stream join; ucnt
-    // feeds tot and the join — checkpoint each (the
-    // trigramModelFrames discipline: one corpus scan per count frame)
-    val bcnt = train
-      .select(explode(wordShingles(tokens(col("text")), 2)).as("bg"))
-      .groupBy("bg").agg(count(lit(1)).as("c12"))
-      .localCheckpoint()
-    val pstats = bcnt
-      .groupBy(ngTok(col("bg"), 0).as("t1"))
-      .agg(sum(col("c12")).as("c1"), count(lit(1)).as("t1types"))
-    val cstats = bcnt
-      .groupBy(ngTok(col("bg"), 1).as("t2"))
-      .agg(count(lit(1)).as("cont"))
-    val ucnt = train.select(explode(tokens(col("text"))).as("t"))
-      .groupBy("t").agg(count(lit(1)).as("u"))
-      .localCheckpoint()
-    val tot = ucnt.agg(sum(col("u")).as("n_tok"), count(lit(1)).as("v"))
-    val btot = bcnt.agg(count(lit(1)).as("b"))
-    val scoredRows = tagged
-      .select(col("split"),
-        explode(wordShingles(tokens(col("text")), 2)).as("bg"))
-      .withColumn("bt1", ngTok(col("bg"), 0))
-      .withColumn("bt2", ngTok(col("bg"), 1))
-      .join(bcnt, Seq("bg"), "left")
-      .join(pstats, col("bt1") === col("t1"), "left")
-      .join(cstats, col("bt2") === col("t2"), "left")
-      .join(ucnt, col("bt2") === col("t"), "left")
-      .crossJoin(broadcast(tot))
-      .crossJoin(broadcast(btot))
-      .select(col("split"),
-        col("c12").isNull.as("unseen"),
-        round((log(coalesce(col("c1"), lit(0L)) + col("v"))
-          - log(coalesce(col("c12"), lit(0L)) + 1))
-          * lit(1000000.0d)).cast("long").as("s_add1"),
-        round((when(col("c1").isNotNull,
-            log(lit(4L) * col("c1") * (col("n_tok") + col("v")))
-              - log(greatest(lit(4L) * coalesce(col("c12"), lit(0L)) - 3,
-                  lit(0L)) * (col("n_tok") + col("v"))
-                + lit(3L) * col("t1types")
-                  * (coalesce(col("u"), lit(0L)) + 1)))
-          .otherwise(log(col("n_tok") + col("v"))
-            - log(coalesce(col("u"), lit(0L)) + 1)))
-          * lit(1000000.0d)).cast("long").as("s_kn"),
-        round((when(col("c1").isNotNull,
-            log(lit(4L) * col("c1") * (col("b") + col("v")))
-              - log(greatest(lit(4L) * coalesce(col("c12"), lit(0L)) - 3,
-                  lit(0L)) * (col("b") + col("v"))
-                + lit(3L) * col("t1types")
-                  * (coalesce(col("cont"), lit(0L)) + 1)))
-          .otherwise(log(col("b") + col("v"))
-            - log(coalesce(col("cont"), lit(0L)) + 1)))
-          * lit(1000000.0d)).cast("long").as("s_knc"))
-    val agg = scoredRows.groupBy("split")
-      .agg(count(lit(1)).as("n_bigrams"),
-        sum(when(col("unseen"), 1L).otherwise(0L)).as("unseen_bigrams"),
-        sum(col("s_add1")).as("sa"), sum(col("s_kn")).as("sk"),
-        sum(col("s_knc")).as("skc"))
-    def side(model: String, sumCol: String) = agg
-      .select(lit(model).as("model"), col("split"), col("n_bigrams"),
-        col("unseen_bigrams"),
-        expr(s"$sumCol div n_bigrams").as("mean_micro"))
-    side("add1", "sa").unionByName(side("backoff", "sk"))
-      .unionByName(side("kn_cont", "skc"))
-  }
-
-  def lmHeldoutBigramQuery(spark: SparkSession, dir: String): DataFrame =
-    lmHeldoutBigram(Tables.documents(spark, dir))
-      .orderBy(col("model"), col("split"))
-
-  // ---------------------------------------------------- trigram Kneser-Ney
-
-  /** Shared trigram-KN model frames over a (possibly split-filtered)
-    * corpus: trigram types, (t1 t2) prefix stats, the MIDDLE-order
-    * continuation table (Kneser-Ney's defining move one order up: the
-    * backoff bigram distribution counts distinct LEFT CONTEXTS in the
-    * trigram table, N1+(·t2t3), not raw bigram frequency), and the
-    * continuation-unigram stats the bigram KN ladder already uses.
-    * Every frame is a map-side-combined keyed aggregate. */
-  private def trigramModelFrames(corpus: DataFrame):
-      (DataFrame, DataFrame, DataFrame, DataFrame, DataFrame,
-       DataFrame, DataFrame) = {
-    // the two corpus-scan count frames are REUSED (tcnt feeds pstats,
-    // mid and the scorer join; bcnt feeds cstats and btot) — without a
-    // checkpoint each reference replays the corpus scan (r17 verdict
-    // #4: lm_heldout_fivegram planned 48 physical scans because every
-    // order re-derived its counts). localCheckpoint materializes each
-    // ONCE; all derived stats frames are vocab-sized aggregates over
-    // the checkpointed RDD, scan-free.
-    val tcnt = corpus
-      .select(explode(wordShingles(tokens(col("text")), 3)).as("tg"))
-      .groupBy("tg").agg(count(lit(1)).as("c123"))
-      .localCheckpoint()
-    val pstats = tcnt
-      .groupBy(ngHead(col("tg"), 2).as("p12"))
-      .agg(sum(col("c123")).as("c12"), count(lit(1)).as("t12types"))
-    val mid = tcnt
-      .select(ngTail(col("tg"), 2).as("s23"))
-      .groupBy("s23").agg(count(lit(1)).as("m23"))
-    val mstats = mid
-      .groupBy(ngTok(col("s23"), 0).as("mt2"))
-      .agg(sum(col("m23")).as("m2"), count(lit(1)).as("t2types"))
-    val bcnt = corpus
-      .select(explode(wordShingles(tokens(col("text")), 2)).as("bg"))
-      .groupBy("bg").agg(count(lit(1)).as("cb"))
-      .localCheckpoint()
-    val cstats = bcnt
-      .groupBy(ngTok(col("bg"), 1).as("ct3"))
-      .agg(count(lit(1)).as("cont"))
-    val btot = bcnt.agg(count(lit(1)).as("b"))
-    val vtot = corpus.select(explode(tokens(col("text"))).as("t"))
-      .agg(countDistinct(col("t")).as("v"))
-    (tcnt, pstats, mid, mstats, cstats, btot, vtot)
-  }
-
-  /** Trigram-LM cross-entropy with INTERPOLATED KNESER-NEY smoothing
-    * (Chen & Goodman 1999 §4.1.6) — the LM family one Markov order up
-    * from bigram_surprisal_kn, the next honest step toward the 5-gram
-    * KenLM gate CCNet actually ships. Per seen trigram (t1 t2 t3),
-    * D = 3/4 exact:
-    *
-    *   p(t3|t1t2) = (c123−D)/c12 + D·T12/c12 · p_kn(t3|t2)
-    *   p_kn(t3|t2) = (m23−D)/m2 + D·T2/m2 · p_cont(t3)   (KN middle
-    *     order: m23 = N1+(·t2t3) distinct left contexts, m2 = N1+(·t2·),
-    *     T2 = distinct continuations of t2 in the trigram table)
-    *   p_cont(t3) = (cont3+1)/(B+V)   (the bigram-KN continuation
-    *     unigram — lm_heldout_bigram's kn_cont backstop, verbatim)
-    *
-    * which collapses to ONE exact rational per trigram TYPE:
-    *   denmid = 4·m2·(B+V)
-    *   nummid = (4·m23−3)·(B+V) + 3·T2·(cont3+1)
-    *   den = 4·c12·denmid,  num = (4·c123−3)·denmid + 3·T12·nummid
-    * and the per-type surprisal rounds ONCE to micro-nats as
-    * round((ln(den)−ln(num))·10⁶), two ln of exact BIGINTs in pinned
-    * order.
-    *
-    * Integer bound (the vocab²-context size question, documented):
-    * den = 16·c12·m2·(B+V). Both engines stay EXACT to 2⁶³ (the ln
-    * arg is the same integer, cast to the same IEEE double even past
-    * 2⁵³, so parity holds to int64's edge; DuckDB overflows LOUDLY
-    * past it). Realistic skew keeps c12·m2·(B+V) < 5·10¹⁷ through
-    * ~10⁸-token corpora; past that, rescale the rational (divide both
-    * sides by B+V and round once more) before going to 5-gram.
-    *
-    * Scale shape — deliberately NOT bigram_surprisal_kn's broadcast
-    * map: the trigram-type model is vocab³-bounded (Heaps keeps it ≪
-    * positions but ≫ the bigram vocab — at 100 TB it is billions of
-    * rows and cannot broadcast). Scoring is the lm_heldout shape
-    * instead: the exploded trigram stream equi-joins the model on its
-    * key and ONE per-doc aggregate collapses it — every stage keyed,
-    * map-side-combinable, nothing model-sized crosses a driver or a
-    * broadcast. Docs with < 3 tokens carry 0/NULL (no evidence). */
-  def trigramSurprisalKn(docs: DataFrame): DataFrame = {
-    val (tcnt, pstats, mid, mstats, cstats, btot, vtot) =
-      trigramModelFrames(docs)
-    val bv = col("b") + col("v")
-    val denmid = lit(4L) * col("m2") * bv
-    val nummid = (lit(4L) * col("m23") - 3) * bv +
-      lit(3L) * col("t2types") * (col("cont") + 1)
-    val den = lit(4L) * col("c12") * denmid
-    val num = (lit(4L) * col("c123") - 3) * denmid +
-      lit(3L) * col("t12types") * nummid
-    val smodel = tcnt
-      .withColumn("p12", ngHead(col("tg"), 2))
-      .withColumn("s23", ngTail(col("tg"), 2))
-      .join(pstats, "p12")
-      .join(mid, "s23")
-      .join(mstats, ngTok(col("s23"), 0) === col("mt2"))
-      // every seen trigram's (t2,t3) is a seen bigram, so the
-      // continuation join is inner by construction
-      .join(cstats, ngTok(col("tg"), 2) === col("ct3"))
-      .crossJoin(broadcast(btot)).crossJoin(broadcast(vtot))
-      // the exact-rational bound, enforced in-plan: past 2⁶³/16 the
-      // long products would WRAP silently on this side (log(negative)
-      // → NULL → sum() drops the type while n_trigrams still counts
-      // it) where the oracle engine fails loudly — fail loudly here
-      // too (r16 review; the double product has headroom vs 5.76e17)
-      .select(col("tg"),
-        when(col("c12").cast("double") * col("m2").cast("double")
-            * bv.cast("double") >= lit(5.7e17d),
-          raise_error(concat(lit("trigram KN: c12*m2*(B+V) >= 5.7e17 " +
-            "overflows the exact int64 rational — rescale the rational " +
-            "(divide both sides by B+V, round once more) before " +
-            "corpora this size (tg="), col("tg"), lit(")"))))
-          .otherwise(round((log(den) - log(num)) * lit(1000000.0d)))
-          .cast("long").as("s"))
-    val perDoc = docs
-      .select(col("doc_id"),
-        explode(wordShingles(tokens(col("text")), 3)).as("tg"))
-      .join(smodel, "tg")
-      .groupBy("doc_id")
-      .agg(count(lit(1)).as("n_trigrams"),
-        sum(col("s")).as("surprisal_micro"))
-    docs.select(col("doc_id")).join(perDoc, Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        coalesce(col("n_trigrams"), lit(0L)).as("n_trigrams"),
-        coalesce(col("surprisal_micro"), lit(0L)).as("surprisal_micro"),
-        when(coalesce(col("n_trigrams"), lit(0L)) > 0,
-          expr("surprisal_micro div n_trigrams")).as("mean_micro"))
-  }
+    knSurprisal(Tables.documents(spark, dir), 2).orderBy(col("doc_id"))
 
   def trigramSurprisalKnQuery(spark: SparkSession, dir: String): DataFrame =
-    trigramSurprisalKn(Tables.documents(spark, dir)).orderBy(col("doc_id"))
+    knSurprisal(Tables.documents(spark, dir), 3).orderBy(col("doc_id"))
 
-  /** Held-out trigram-KN vs bigram-KN on the SAME trigram positions —
-    * lm_heldout_bigram's train/test discipline one order up, and the
-    * apples-to-apples comparison that bigram frame cannot give (its
-    * kn_cont row scores bigram positions): both models here score
-    * every (t1 t2 → t3) prediction site, so the mean_micro gap IS the
-    * value of the extra order of context on unseen data.
-    *
-    * Fallback ladder per scored trigram (train-split stats):
-    *   kn_trigram, (t1 t2) seen as a context:
-    *     num = max(4·c123−3,0)·denmid + 3·T12·nummid, den = 4·c12·denmid
-    *     (a seen context forces m2 ≥ 1, so nummid is always defined;
-    *      unseen (t2,t3) middles enter via max(4·m23−3,0) = 0)
-    *   context unseen, t2 seen as a MIDDLE context:
-    *     num = nummid, den = denmid      (pure middle order)
-    *   t2 unseen:
-    *     num = cont3+1, den = B+V        (pure continuation unigram)
-    *   kn_bigram: lm_heldout_bigram's kn_cont ladder on (t2, t3),
-    *     verbatim.
-    * Every branch rounds ONCE to micro-nats; unseen rows share exact
-    * integer inputs, so both engines round identically. */
-  def lmHeldoutTrigram(docs: DataFrame, trainPct: Int = 80,
-                       valPct: Int = 10): DataFrame = {
-    require(trainPct > 0 && valPct >= 0 && trainPct + valPct <= 100)
-    val trainT = 4294967296L * trainPct / 100
-    val valT = 4294967296L * (trainPct + valPct) / 100
-    val tagged = docs.select(col("doc_id"), col("text"),
-      when(TextAnalysis.sampleBucket < trainT, "train")
-        .when(TextAnalysis.sampleBucket < valT, "val")
-        .otherwise("test").as("split"))
-    val train = tagged.filter(col("split") === "train")
-    val (tcnt, pstats, mid, mstats, cstats, btot, vtot) =
-      trigramModelFrames(train)
-    // bigram-KN stats for the comparison model (train split)
-    val btr = train
-      .select(explode(wordShingles(tokens(col("text")), 2)).as("bg"))
-      .groupBy("bg").agg(count(lit(1)).as("cb2"))
-      .localCheckpoint() // reused by bpstats + the scored join — one scan
-    val bpstats = btr
-      .groupBy(ngTok(col("bg"), 0).as("bt1"))
-      .agg(sum(col("cb2")).as("bc1"), count(lit(1)).as("bt1types"))
-    val scored = tagged
-      .select(col("split"),
-        explode(wordShingles(tokens(col("text")), 3)).as("tg"))
-      .withColumn("p12", ngHead(col("tg"), 2))
-      .withColumn("s23", ngTail(col("tg"), 2))
-      .withColumn("t2", ngTok(col("tg"), 1))
-      .withColumn("t3", ngTok(col("tg"), 2))
-      .join(tcnt, Seq("tg"), "left")
-      .join(pstats, Seq("p12"), "left")
-      .join(mid, Seq("s23"), "left")
-      .join(mstats, col("t2") === col("mt2"), "left")
-      .join(cstats, col("t3") === col("ct3"), "left")
-      .join(btr, col("s23") === col("bg"), "left")
-      .join(bpstats, col("t2") === col("bt1"), "left")
-      .crossJoin(broadcast(btot)).crossJoin(broadcast(vtot))
-    val bv = col("b") + col("v")
-    val denmid = lit(4L) * col("m2") * bv
-    val nummid = greatest(lit(4L) * coalesce(col("m23"), lit(0L)) - 3,
-      lit(0L)) * bv +
-      lit(3L) * col("t2types") * (coalesce(col("cont"), lit(0L)) + 1)
-    val rows = scored.select(col("split"),
-      col("c123").isNull.as("unseen"),
-      // same in-plan int64 bound as trigramSurprisalKn (r16 review)
-      when(col("c12").isNotNull &&
-          col("c12").cast("double") * col("m2").cast("double")
-            * bv.cast("double") >= lit(5.7e17d),
-        raise_error(lit("trigram KN heldout: c12*m2*(B+V) >= 5.7e17 " +
-          "overflows the exact int64 rational — rescale the rational " +
-          "before corpora this size")))
-        .otherwise(
-      round((when(col("c12").isNotNull,
-          log(lit(4L) * col("c12") * denmid)
-            - log(greatest(lit(4L) * coalesce(col("c123"), lit(0L)) - 3,
-                lit(0L)) * denmid
-              + lit(3L) * col("t12types") * nummid))
-        .when(col("m2").isNotNull, log(denmid) - log(nummid))
-        .otherwise(log(bv)
-          - log(coalesce(col("cont"), lit(0L)) + 1)))
-        * lit(1000000.0d)))
-        .cast("long").as("s_tri"),
-      round((when(col("bc1").isNotNull,
-          log(lit(4L) * col("bc1") * bv)
-            - log(greatest(lit(4L) * coalesce(col("cb2"), lit(0L)) - 3,
-                lit(0L)) * bv
-              + lit(3L) * col("bt1types")
-                * (coalesce(col("cont"), lit(0L)) + 1)))
-        .otherwise(log(bv)
-          - log(coalesce(col("cont"), lit(0L)) + 1)))
-        * lit(1000000.0d)).cast("long").as("s_big"))
-    val agg = rows.groupBy("split")
-      .agg(count(lit(1)).as("n_trigrams"),
-        sum(when(col("unseen"), 1L).otherwise(0L)).as("unseen_trigrams"),
-        sum(col("s_tri")).as("st"), sum(col("s_big")).as("sb"))
-    def side(model: String, sumCol: String) = agg
-      .select(lit(model).as("model"), col("split"), col("n_trigrams"),
-        col("unseen_trigrams"),
-        expr(s"$sumCol div n_trigrams").as("mean_micro"))
-    side("kn_bigram", "sb").unionByName(side("kn_trigram", "st"))
-  }
+  def quadgramSurprisalKnQuery(spark: SparkSession, dir: String): DataFrame =
+    knSurprisal(Tables.documents(spark, dir), 4).orderBy(col("doc_id"))
 
-  def lmHeldoutTrigramQuery(spark: SparkSession, dir: String): DataFrame =
-    lmHeldoutTrigram(Tables.documents(spark, dir))
+  def fivegramSurprisalKnQuery(spark: SparkSession, dir: String): DataFrame =
+    knSurprisal(Tables.documents(spark, dir), 5).orderBy(col("doc_id"))
+
+  def lmHeldoutBigramQuery(spark: SparkSession, dir: String): DataFrame =
+    knHeldout(Tables.documents(spark, dir), 2)
       .orderBy(col("model"), col("split"))
 
-  /** CCNet-style PERPLEXITY BUCKETING (Wenzek et al. 2020): CCNet
-    * partitions each language's crawl into head/middle/tail by LM
-    * perplexity and trains mostly on the head. The quantile cut is a
-    * corpus-sized sort at 100 TB, so this ships the scale-honest form
-    * CCNet itself computes first: the per-(lang, bucket) HISTOGRAM of
-    * per-doc mean trigram-KN surprisal (fixed micro-nat bucket width —
-    * exact integer floor-div, no sort, no window), with doc/trigram
-    * counts and the in-bucket mean range. The head/middle/tail
-    * thresholds are then read off the histogram's cumulative counts
-    * (model-sized — |langs|·|buckets| rows) and applied as a map-only
-    * filter; the histogram IS the partitioning decision artifact.
-    * Docs with no trigram evidence land in bucket NULL — they need a
-    * length gate, not a perplexity gate, and hiding them would
-    * silently shrink the corpus. */
+  def lmHeldoutTrigramQuery(spark: SparkSession, dir: String): DataFrame =
+    knHeldout(Tables.documents(spark, dir), 3)
+      .orderBy(col("model"), col("split"))
+
+  def lmHeldoutQuadgramQuery(spark: SparkSession, dir: String): DataFrame =
+    knHeldout(Tables.documents(spark, dir), 4)
+      .orderBy(col("model"), col("split"))
+
+  def lmHeldoutFivegramQuery(spark: SparkSession, dir: String): DataFrame =
+    knHeldout(Tables.documents(spark, dir), 5)
+      .orderBy(col("model"), col("split"))
+
+  /** The pruning-threshold curve that justifies θ₄: per threshold, the
+    * kept quadgram types (what ships) against the corpus-level mean
+    * surprisal (what pruning costs). Σ over positions of s equals
+    * Σ over types of c·s, so the whole curve is ONE aggregate over the
+    * in-corpus type scores, each threshold a column of it — the corpus
+    * is scanned once per count frame, not once per θ. A flat
+    * mean_micro next to collapsing kept_types is the green light to
+    * prune. */
+  def knPruneCurve(docs: DataFrame,
+                   thetas: Seq[Long] = Seq(1L, 2L, 4L)): DataFrame = {
+    require(thetas.nonEmpty && thetas.forall(_ >= 1) &&
+      thetas.distinct.size == thetas.size,
+      s"thetas must be distinct and >= 1: $thetas")
+    val m = new KnModel(docs, 4, 1L, 1L)
+    val sums = knTypeScores(m, m.continuation, m.ladder(3),
+        thetas.map(th => m.raw(4, Some(th))), "kn_prune_curve")
+      .agg(count(lit(1)).as("total_types"), sum(col("c")).as("n_positions")
+        +: thetas.zipWithIndex.flatMap { case (th, i) => Seq(
+          sum(when(col("c") >= th, 1L).otherwise(0L)).as(s"kept$i"),
+          sum(col("c") * col(s"s$i")).as(s"sum$i")) }: _*)
+    sums.select(explode(array(thetas.zipWithIndex.map { case (th, i) =>
+        struct(lit(th).as("theta"), col(s"kept$i").as("kept_types"),
+          col("total_types"), col("n_positions"),
+          expr(s"sum$i div n_positions").as("mean_micro"))
+      }: _*)).as("r"))
+      .select("r.*")
+  }
+
+  def knPruneCurveQuery(spark: SparkSession, dir: String): DataFrame =
+    knPruneCurve(Tables.documents(spark, dir)).orderBy(col("theta"))
+
+  /** CCNet-style perplexity bucketing (Wenzek et al. 2020): the
+    * per-(lang, bucket) histogram of per-doc mean order-3 KN surprisal
+    * (fixed micro-nat bucket width — exact integer floor-div, no sort,
+    * no window), with doc/trigram counts and the in-bucket mean range.
+    * CCNet's head/middle/tail thresholds read off its cumulative
+    * counts (model-sized — |langs|·|buckets| rows). Docs with no
+    * trigram evidence land in bucket NULL: they need a length gate,
+    * not a perplexity gate, and hiding them would silently shrink the
+    * corpus. */
   def pplHistogram(docs: DataFrame,
                    bucketMicro: Long = 500000L): DataFrame = {
     require(bucketMicro >= 1)
-    val scored = trigramSurprisalKn(docs)
+    val scored = knSurprisal(docs, 3)
     docs.select(col("doc_id"), col("lang"))
       .join(scored, "doc_id")
       .select(col("lang"),
@@ -904,530 +820,10 @@ object QualityModels {
   }
 
   def pplHistogramQuery(spark: SparkSession, dir: String): DataFrame =
-    // asc_nulls_last: the NULL bucket (docs with < 3 tokens) must sort
-    // where the oracle's ORDER BY puts it — DuckDB defaults NULLS LAST
-    // while Spark defaults NULLS FIRST, a positional row-order mismatch
-    // the moment a short doc exists (r16 ADVICE #1)
+    // asc_nulls_last: DuckDB sorts NULLs last, Spark first; the NULL
+    // bucket (docs with < 3 tokens) must sort where the oracle puts it
     pplHistogram(Tables.documents(spark, dir))
       .orderBy(col("lang"), col("bucket").asc_nulls_last)
-
-  // ------------------------------------------- pruned quadgram Kneser-Ney
-
-  /** The pruned order-4 model frames over a (possibly split-filtered)
-    * corpus: ALL quadgram types with counts (qall — needed to score
-    * seen-but-pruned positions), and the kept-prefix stats computed
-    * over the PRUNED table only (c123k = Σ kept c1234 per (t1 t2 t3),
-    * T123 = kept continuation types) — KenLM's discipline: discounts
-    * and interpolation weights are recomputed over the retained set,
-    * so the pruned model is self-consistent, not a truncated copy. */
-  private def quadgramModelFrames(corpus: DataFrame, minCount: Long):
-      (DataFrame, DataFrame) = {
-    val qall = corpus
-      .select(explode(wordShingles(tokens(col("text")), 4)).as("qg"))
-      .groupBy("qg").agg(count(lit(1)).as("c1234"))
-      .localCheckpoint() // reused by qpstats + the scorer join — one scan
-    val qpstats = qall.filter(col("c1234") >= minCount)
-      .groupBy(ngHead(col("qg"), 3).as("p123"))
-      .agg(sum(col("c1234")).as("c123k"), count(lit(1)).as("t123types"))
-    (qall, qpstats)
-  }
-
-  /** Quadgram-LM cross-entropy with COUNT-PRUNED interpolated
-    * Kneser-Ney — the order-4 rung of the LM ladder, and the first
-    * one where the model table CANNOT ship whole: at web scale the
-    * raw quadgram-type table outgrows vocab³ by another Heaps factor,
-    * so the standard KenLM move applies — keep only types with
-    * c1234 ≥ minCount (singleton pruning at θ=2 drops ~82% of types
-    * on the test corpus) and let pruned positions back off. The
-    * BACKOFF DISTRIBUTION is the existing unpruned trigram-KN
-    * rational (trigramModelFrames — vocab³-bounded tables keep their
-    * own keyed-join shape), so pruning bites exactly where the blowup
-    * is: the top order.
-    *
-    * Per seen quadgram type (t1 t2 t3 t4), with D = 3/4 exact and
-    * p3 = num3/den3 the trigram-KN conditional of (t2 t3 → t4)
-    * (trigramSurprisalKn's rational, joined on the SUFFIX trigram):
-    *
-    *   kept (c1234 ≥ θ):
-    *     p4 = (c1234−D)/c123k + D·T123/c123k · p3
-    *        ⇒ num = (4·c1234−3)·den3 + 3·T123·num3, den = 4·c123k·den3
-    *   pruned type, prefix kept (c123k ≥ 1):
-    *     p4 = D·T123/c123k · p3   (the interpolation weight alone —
-    *       interpolated KN's zero-count branch)
-    *        ⇒ num = 3·T123·num3,                  den = 4·c123k·den3
-    *   prefix entirely pruned:
-    *     p4 = p3                 ⇒ num = num3,    den = den3
-    *
-    * and the per-type surprisal rounds ONCE to micro-nats as
-    * round((ln(den)−ln(num))·10⁶) — two ln of exact BIGINTs in pinned
-    * order, both engines bit-identical.
-    *
-    * Integer bound: every branch's probability is ≤ 1 so num ≤ den,
-    * and den = 64·c123k·c12·m2·(B+V); the in-plan guard raises when
-    * c123k·c12·m2·(B+V) ≥ 1.4e17 (den would pass 9e18 and WRAP here
-    * while the oracle engine fails loudly). Measured headroom at
-    * sf0.1: max den ≈ 3.4e11.
-    *
-    * Scale shape — the trigram discipline one order up: the model is
-    * keyed equi-joins end to end (the quadgram table is exactly what
-    * must NEVER broadcast), one exploded position stream, ONE per-doc
-    * aggregate. Docs with < 4 tokens carry 0/NULL (no evidence). */
-  def quadgramSurprisalKn(docs: DataFrame,
-                          minCount: Long = 2L): DataFrame = {
-    require(minCount >= 1)
-    val (tcnt, pstats, mid, mstats, cstats, btot, vtot) =
-      trigramModelFrames(docs)
-    val (qall, qpstats) = quadgramModelFrames(docs, minCount)
-    val smodel = scoreQuadgramTypes(qall, qpstats, minCount,
-      tcnt, pstats, mid, mstats, cstats, btot, vtot)
-    val perDoc = docs
-      .select(col("doc_id"),
-        explode(wordShingles(tokens(col("text")), 4)).as("qg"))
-      .join(smodel, "qg")
-      .groupBy("doc_id")
-      .agg(count(lit(1)).as("n_quadgrams"),
-        sum(col("s")).as("surprisal_micro"))
-    docs.select(col("doc_id")).join(perDoc, Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        coalesce(col("n_quadgrams"), lit(0L)).as("n_quadgrams"),
-        coalesce(col("surprisal_micro"), lit(0L)).as("surprisal_micro"),
-        when(coalesce(col("n_quadgrams"), lit(0L)) > 0,
-          expr("surprisal_micro div n_quadgrams")).as("mean_micro"))
-  }
-
-  /** The pruned quadgram-KN EXACT RATIONAL per seen quadgram type —
-    * (qg, c1234, den4, num4, bound4): [[scoreQuadgramTypes]]'s
-    * three-branch ladder with the rounding deferred, so the order-5
-    * scorer can stack its own rational on the same integers (exactly
-    * how the trigram rational feeds this one). The prefix-unkept
-    * branch folds to (den3, num3) here, so log(den4)−log(num4) is the
-    * complete ladder. bound4 carries the guard product
-    * c123k·c12·m2·(B+V) as a double for the callers' int64 checks.
-    * The suffix-trigram joins are inner by construction (a seen
-    * quadgram's suffix is a seen trigram, its (t2 t3) a seen trigram
-    * prefix, its (t3 t4) a seen middle pair); only qpstats is outer —
-    * a prefix with no kept types falls to the pure-backoff branch. */
-  private def quadgramRationalTypes(qall: DataFrame, qpstats: DataFrame,
-      minCount: Long, tcnt: DataFrame, pstats: DataFrame, mid: DataFrame,
-      mstats: DataFrame, cstats: DataFrame, btot: DataFrame,
-      vtot: DataFrame): DataFrame = {
-    val bv = col("b") + col("v")
-    val denmid = lit(4L) * col("m2") * bv
-    val nummid = (lit(4L) * col("m23") - 3) * bv +
-      lit(3L) * col("t2types") * (col("cont") + 1)
-    val den3 = lit(4L) * col("c12") * denmid
-    val num3 = (lit(4L) * col("c123") - 3) * denmid +
-      lit(3L) * col("t12types") * nummid
-    val den4 = lit(4L) * col("c123k") * den3
-    val num4 = when(col("c1234") >= minCount,
-        (lit(4L) * col("c1234") - 3) * den3 +
-          lit(3L) * col("t123types") * num3)
-      .otherwise(lit(3L) * col("t123types") * num3)
-    qall
-      .withColumn("p123", ngHead(col("qg"), 3))
-      .withColumn("sfx", ngTail(col("qg"), 3))
-      .join(qpstats, Seq("p123"), "left")
-      .join(tcnt, col("sfx") === col("tg"))
-      .join(pstats, ngHead(col("sfx"), 2) === col("p12"))
-      .join(mid, ngTail(col("sfx"), 2) === col("s23"))
-      .join(mstats, ngTok(col("sfx"), 1) === col("mt2"))
-      .join(cstats, ngTok(col("sfx"), 2) === col("ct3"))
-      .crossJoin(broadcast(btot)).crossJoin(broadcast(vtot))
-      .select(col("qg"), col("c1234"),
-        when(col("c123k").isNotNull, den4).otherwise(den3).as("den4"),
-        when(col("c123k").isNotNull, num4).otherwise(num3).as("num4"),
-        (coalesce(col("c123k"), lit(1L)).cast("double")
-          * col("c12").cast("double") * col("m2").cast("double")
-          * bv.cast("double")).as("bound4"))
-  }
-
-  /** The per-type scorer shared by quadgramSurprisalKn and
-    * knPruneCurve: every SEEN quadgram type → (qg, c1234, s) — the
-    * deferred rational above, rounded ONCE to micro-nats.
-    * num ≤ den on every branch (probabilities ≤ 1), so guarding den
-    * = 64·c123k·c12·m2·(B+V) < 2⁶³ guards the whole rational. */
-  private def scoreQuadgramTypes(qall: DataFrame, qpstats: DataFrame,
-      minCount: Long, tcnt: DataFrame, pstats: DataFrame, mid: DataFrame,
-      mstats: DataFrame, cstats: DataFrame, btot: DataFrame,
-      vtot: DataFrame): DataFrame =
-    quadgramRationalTypes(qall, qpstats, minCount, tcnt, pstats, mid,
-      mstats, cstats, btot, vtot)
-      .select(col("qg"), col("c1234"),
-        when(col("bound4") >= lit(1.4e17d),
-          raise_error(concat(lit("quadgram KN: c123k*c12*m2*(B+V) >= " +
-            "1.4e17 overflows the exact int64 rational — rescale the " +
-            "rational before corpora this size (qg="), col("qg"),
-            lit(")"))))
-          .otherwise(round(
-            (log(col("den4")) - log(col("num4"))) * lit(1000000.0d)))
-          .cast("long").as("s"))
-
-  def quadgramSurprisalKnQuery(spark: SparkSession, dir: String): DataFrame =
-    quadgramSurprisalKn(Tables.documents(spark, dir)).orderBy(col("doc_id"))
-
-  /** The pruning-threshold CURVE — the measurement that justifies the
-    * θ knob: for each threshold, the model's row count (what ships)
-    * against the corpus-level mean surprisal (what pruning costs).
-    * Positions need no re-scan per θ: Σ_positions s = Σ_types c1234·s,
-    * so the curve is |thetas| keyed joins over the SAME type table —
-    * the corpus is touched once for qall, once for the trigram
-    * frames. A flat mean_micro next to a collapsing kept_types is the
-    * green light to prune; a jumping mean is the alarm. */
-  def knPruneCurve(docs: DataFrame,
-                   thetas: Seq[Long] = Seq(1L, 2L, 4L)): DataFrame = {
-    require(thetas.nonEmpty && thetas.forall(_ >= 1))
-    val (tcnt0, pstats0, mid0, mstats0, cstats0, btot0, vtot0) =
-      trigramModelFrames(docs)
-    // model-sized frames reused |thetas| times — checkpoint so the
-    // corpus scans don't replicate per threshold
-    val qall = docs
-      .select(explode(wordShingles(tokens(col("text")), 4)).as("qg"))
-      .groupBy("qg").agg(count(lit(1)).as("c1234"))
-      .localCheckpoint()
-    val Seq(tcnt, pstats, mid, mstats, cstats, btot, vtot) =
-      Seq(tcnt0, pstats0, mid0, mstats0, cstats0, btot0, vtot0)
-        .map(_.localCheckpoint())
-    thetas.map { th =>
-      val qpstats = qall.filter(col("c1234") >= th)
-        .groupBy(ngHead(col("qg"), 3).as("p123"))
-        .agg(sum(col("c1234")).as("c123k"), count(lit(1)).as("t123types"))
-      scoreQuadgramTypes(qall, qpstats, th,
-        tcnt, pstats, mid, mstats, cstats, btot, vtot)
-        .agg(
-          sum(when(col("c1234") >= th, 1L).otherwise(0L)).as("kept_types"),
-          count(lit(1)).as("total_types"),
-          sum(col("c1234")).as("n_positions"),
-          sum(col("c1234") * col("s")).as("sum_micro"))
-        .select(lit(th).as("theta"), col("kept_types"), col("total_types"),
-          col("n_positions"),
-          expr("sum_micro div n_positions").as("mean_micro"))
-    }.reduce(_.unionByName(_))
-  }
-
-  def knPruneCurveQuery(spark: SparkSession, dir: String): DataFrame =
-    knPruneCurve(Tables.documents(spark, dir)).orderBy(col("theta"))
-
-  /** Held-out quadgram-KN (pruned) vs trigram-KN on the SAME quadgram
-    * positions — lmHeldoutTrigram's frame one order up: both models
-    * score every (t1 t2 t3 → t4) prediction site from train-split
-    * statistics, so the mean_micro gap IS the value of the fourth
-    * order net of pruning, and `unseen_quadgrams` counts kept-model
-    * misses (pruned types score as misses — they are misses, that is
-    * what shipping a pruned model means).
-    *
-    * Fallback ladder per scored position: the trigram leg is
-    * lmHeldoutTrigram's three-branch ladder on the SUFFIX (t2 t3 t4)
-    * verbatim, producing its branch-dependent exact rational
-    * num3/den3; the quadgram leg stacks on top —
-    *   kept type:      num = (4·c1234−3)·den3 + 3·T123·num3,
-    *                   den = 4·c123k·den3
-    *   prefix kept:    num = 3·T123·num3, den = 4·c123k·den3
-    *   prefix unkept:  num = num3, den = den3  (pure backoff)
-    * Every branch rounds ONCE to micro-nats from exact BIGINTs. */
-  def lmHeldoutQuadgram(docs: DataFrame, minCount: Long = 2L,
-                        trainPct: Int = 80, valPct: Int = 10): DataFrame = {
-    require(minCount >= 1)
-    require(trainPct > 0 && valPct >= 0 && trainPct + valPct <= 100)
-    val trainT = 4294967296L * trainPct / 100
-    val valT = 4294967296L * (trainPct + valPct) / 100
-    val tagged = docs.select(col("doc_id"), col("text"),
-      when(TextAnalysis.sampleBucket < trainT, "train")
-        .when(TextAnalysis.sampleBucket < valT, "val")
-        .otherwise("test").as("split"))
-    val train = tagged.filter(col("split") === "train")
-    val (tcnt, pstats, mid, mstats, cstats, btot, vtot) =
-      trigramModelFrames(train)
-    val (qall, qpstats) = quadgramModelFrames(train, minCount)
-    val qkept = qall.filter(col("c1234") >= minCount)
-    val scored = tagged
-      .select(col("split"),
-        explode(wordShingles(tokens(col("text")), 4)).as("qg"))
-      .withColumn("p123", ngHead(col("qg"), 3))
-      .withColumn("t2", ngTok(col("qg"), 1))
-      .withColumn("t3", ngTok(col("qg"), 2))
-      .withColumn("t4", ngTok(col("qg"), 3))
-      .withColumn("sfx", concat_ws(" ", col("t2"), col("t3"), col("t4")))
-      .join(qkept, Seq("qg"), "left")
-      .join(qpstats, Seq("p123"), "left")
-      .join(tcnt, col("sfx") === col("tg"), "left")
-      .join(pstats, concat_ws(" ", col("t2"), col("t3")) === col("p12"),
-        "left")
-      .join(mid, concat_ws(" ", col("t3"), col("t4")) === col("s23"), "left")
-      .join(mstats, col("t3") === col("mt2"), "left")
-      .join(cstats, col("t4") === col("ct3"), "left")
-      .crossJoin(broadcast(btot)).crossJoin(broadcast(vtot))
-    val bv = col("b") + col("v")
-    val denmid = lit(4L) * col("m2") * bv
-    val nummid = greatest(lit(4L) * coalesce(col("m23"), lit(0L)) - 3,
-      lit(0L)) * bv +
-      lit(3L) * col("t2types") * (coalesce(col("cont"), lit(0L)) + 1)
-    // the trigram ladder's branch-dependent exact rational on the
-    // suffix — lmHeldoutTrigram's three branches, as reusable columns
-    val den3 = when(col("c12").isNotNull, lit(4L) * col("c12") * denmid)
-      .when(col("m2").isNotNull, denmid)
-      .otherwise(bv)
-    val num3 = when(col("c12").isNotNull,
-        greatest(lit(4L) * coalesce(col("c123"), lit(0L)) - 3, lit(0L))
-          * denmid + lit(3L) * col("t12types") * nummid)
-      .when(col("m2").isNotNull, nummid)
-      .otherwise(coalesce(col("cont"), lit(0L)) + 1)
-    val rows = scored.select(col("split"),
-      col("c1234").isNull.as("unseen"),
-      // the same den-only int64 guard as quadgramSurprisalKn, with
-      // absent branch components coalesced to their bound-neutral 1
-      when(coalesce(col("c123k"), lit(1L)).cast("double")
-          * coalesce(col("c12"), lit(1L)).cast("double")
-          * coalesce(col("m2"), lit(1L)).cast("double")
-          * bv.cast("double") >= lit(1.4e17d),
-        raise_error(lit("quadgram KN heldout: c123k*c12*m2*(B+V) >= " +
-          "1.4e17 overflows the exact int64 rational — rescale the " +
-          "rational before corpora this size")))
-        .otherwise(round((log(den3) - log(num3)) * lit(1000000.0d)))
-        .cast("long").as("s_tri"),
-      round((when(col("c123k").isNotNull,
-          log(lit(4L) * col("c123k") * den3)
-            - log(when(col("c1234").isNotNull,
-                (lit(4L) * col("c1234") - 3) * den3 +
-                  lit(3L) * col("t123types") * num3)
-              .otherwise(lit(3L) * col("t123types") * num3)))
-        .otherwise(log(den3) - log(num3)))
-        * lit(1000000.0d)).cast("long").as("s_quad"))
-    val agg = rows.groupBy("split")
-      .agg(count(lit(1)).as("n_quadgrams"),
-        sum(when(col("unseen"), 1L).otherwise(0L)).as("unseen_quadgrams"),
-        sum(col("s_tri")).as("st"), sum(col("s_quad")).as("sq"))
-    def side(model: String, sumCol: String) = agg
-      .select(lit(model).as("model"), col("split"), col("n_quadgrams"),
-        col("unseen_quadgrams"),
-        expr(s"$sumCol div n_quadgrams").as("mean_micro"))
-    side("kn_trigram", "st").unionByName(side("kn_quadgram", "sq"))
-  }
-
-  def lmHeldoutQuadgramQuery(spark: SparkSession, dir: String): DataFrame =
-    lmHeldoutQuadgram(Tables.documents(spark, dir))
-      .orderBy(col("model"), col("split"))
-
-  // ---------------------------------------- pruned fivegram Kneser-Ney
-
-  /** The pruned order-5 model frames: ALL fivegram types with counts
-    * (needed to score seen-but-pruned positions) and the kept-prefix
-    * stats over the RETAINED set only (c1234k = Σ kept c12345 per
-    * (t1..t4), T1234 = kept continuation types) — the same KenLM
-    * recompute-over-retained discipline as [[quadgramModelFrames]]. */
-  private def fivegramModelFrames(corpus: DataFrame, minCount: Long):
-      (DataFrame, DataFrame) = {
-    val pall = corpus
-      .select(explode(wordShingles(tokens(col("text")), 5)).as("pg"))
-      .groupBy("pg").agg(count(lit(1)).as("c12345"))
-      .localCheckpoint() // reused by ppstats + the scorer join — one scan
-    val ppstats = pall.filter(col("c12345") >= minCount)
-      .groupBy(ngHead(col("pg"), 4).as("p1234"))
-      .agg(sum(col("c12345")).as("c1234k"), count(lit(1)).as("t1234types"))
-    (pall, ppstats)
-  }
-
-  /** Per-type order-5 scorer: every SEEN fivegram type → (pg, s),
-    * stacking the pruned ladder on the deferred quadgram rational
-    * exactly as the quadgram scorer stacks on the trigram one —
-    *   kept (c12345 ≥ θ₅):
-    *     num = (4·c12345−3)·den4 + 3·T1234·num4, den = 4·c1234k·den4
-    *   pruned type, prefix kept: num = 3·T1234·num4, den = 4·c1234k·den4
-    *   prefix entirely pruned:   num = num4,          den = den4
-    * The suffix-quadgram join is inner by construction (a seen
-    * fivegram's suffix is a seen quadgram). num ≤ den on every branch,
-    * so the den-only bound covers the rational: den = 256·c1234k·
-    * c123k·c12·m2·(B+V), guarded at c1234k·bound4 ≥ 3.5e16 ≈ 2⁶³/256. */
-  private def scoreFivegramTypes(pall: DataFrame, ppstats: DataFrame,
-      minCount: Long, qrat: DataFrame): DataFrame = {
-    val den5 = lit(4L) * col("c1234k") * col("den4")
-    val num5 = when(col("c12345") >= minCount,
-        (lit(4L) * col("c12345") - 3) * col("den4") +
-          lit(3L) * col("t1234types") * col("num4"))
-      .otherwise(lit(3L) * col("t1234types") * col("num4"))
-    pall
-      .withColumn("pfx4", ngHead(col("pg"), 4))
-      .withColumn("sfx4", ngTail(col("pg"), 4))
-      .join(ppstats, col("pfx4") === col("p1234"), "left")
-      .join(qrat, col("sfx4") === col("qg"))
-      .select(col("pg"),
-        when(coalesce(col("c1234k"), lit(1L)).cast("double")
-            * col("bound4") >= lit(3.5e16d),
-          raise_error(concat(lit("fivegram KN: c1234k*c123k*c12*m2*(B+V) " +
-            ">= 3.5e16 overflows the exact int64 rational — rescale the " +
-            "rational before corpora this size (pg="), col("pg"),
-            lit(")"))))
-          .otherwise(round(
-            (when(col("c1234k").isNotNull, log(den5) - log(num5))
-              .otherwise(log(col("den4")) - log(col("num4"))))
-              * lit(1000000.0d)))
-          .cast("long").as("s"))
-  }
-
-  /** Fivegram-LM cross-entropy with count-pruned interpolated
-    * Kneser-Ney — the order CCNet's KenLM gate actually ships (Wenzek
-    * et al. 2020 train a 5-gram model; KenLM's own pruning keeps it
-    * storable). Both top orders are pruned (θ₄ for the quadgram
-    * backoff, θ₅ for the top) with interpolation weights recomputed
-    * over the retained sets; pruned positions back off through the
-    * pruned quadgram rational to the unpruned trigram-KN rational —
-    * the full ladder from [[trigramSurprisalKn]] up, every branch one
-    * exact int64 rational rounded ONCE to micro-nats.
-    *
-    * Scale shape — the trigram discipline two orders up: the
-    * fivegram-type table is the most explosive frame in the repo and
-    * must NEVER broadcast; every model join is a keyed equi-join, the
-    * position stream explodes once, ONE per-doc aggregate collapses
-    * it. Docs with < 5 tokens carry 0/NULL (no evidence).
-    *
-    * Integer bound: den = 256·c1234k·c123k·c12·m2·(B+V), guarded
-    * in-plan at 3.5e16 ≈ 2⁶³/256 (measured max at sf0.1 ≈ 1.4e12 —
-    * four orders of headroom; past it, rescale the rational by B+V
-    * and round once more, the documented trigram discipline). */
-  def fivegramSurprisalKn(docs: DataFrame, minCount4: Long = 2L,
-                          minCount5: Long = 2L): DataFrame = {
-    require(minCount4 >= 1 && minCount5 >= 1)
-    val (tcnt, pstats, mid, mstats, cstats, btot, vtot) =
-      trigramModelFrames(docs)
-    val (qall, qpstats) = quadgramModelFrames(docs, minCount4)
-    val qrat = quadgramRationalTypes(qall, qpstats, minCount4,
-      tcnt, pstats, mid, mstats, cstats, btot, vtot)
-    val (pall, ppstats) = fivegramModelFrames(docs, minCount5)
-    val smodel = scoreFivegramTypes(pall, ppstats, minCount5, qrat)
-    val perDoc = docs
-      .select(col("doc_id"),
-        explode(wordShingles(tokens(col("text")), 5)).as("pg"))
-      .join(smodel, "pg")
-      .groupBy("doc_id")
-      .agg(count(lit(1)).as("n_fivegrams"),
-        sum(col("s")).as("surprisal_micro"))
-    docs.select(col("doc_id")).join(perDoc, Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        coalesce(col("n_fivegrams"), lit(0L)).as("n_fivegrams"),
-        coalesce(col("surprisal_micro"), lit(0L)).as("surprisal_micro"),
-        when(coalesce(col("n_fivegrams"), lit(0L)) > 0,
-          expr("surprisal_micro div n_fivegrams")).as("mean_micro"))
-  }
-
-  def fivegramSurprisalKnQuery(spark: SparkSession, dir: String): DataFrame =
-    fivegramSurprisalKn(Tables.documents(spark, dir)).orderBy(col("doc_id"))
-
-  /** Held-out PRUNED fivegram-KN vs pruned quadgram-KN on the SAME
-    * fivegram prediction sites — lmHeldoutQuadgram's frame one order
-    * up, closing the heldout ladder at the order CCNet ships: both
-    * models score every (t1..t4 → t5) site from train-split stats, so
-    * the mean_micro gap IS the value of the fifth order net of
-    * pruning, and `unseen_fivegrams` counts kept-model misses.
-    *
-    * Fallback ladder per scored site (train-split stats): the
-    * quadgram leg is lmHeldoutQuadgram's full ladder on the SUFFIX
-    * quadgram (t2..t5) — its own trigram ladder on (t3 t4 t5) at the
-    * bottom — producing the branch-dependent exact rational
-    * num4/den4; the fivegram leg stacks the pruned three-branch
-    * ladder on top (kept / pruned-with-kept-prefix / prefix-unkept
-    * ⇒ pure backoff). Every branch rounds ONCE to micro-nats from
-    * exact int64s; the den-only guard covers both legs. */
-  def lmHeldoutFivegram(docs: DataFrame, minCount4: Long = 2L,
-                        minCount5: Long = 2L, trainPct: Int = 80,
-                        valPct: Int = 10): DataFrame = {
-    require(minCount4 >= 1 && minCount5 >= 1)
-    require(trainPct > 0 && valPct >= 0 && trainPct + valPct <= 100)
-    val trainT = 4294967296L * trainPct / 100
-    val valT = 4294967296L * (trainPct + valPct) / 100
-    val tagged = docs.select(col("doc_id"), col("text"),
-      when(TextAnalysis.sampleBucket < trainT, "train")
-        .when(TextAnalysis.sampleBucket < valT, "val")
-        .otherwise("test").as("split"))
-    val train = tagged.filter(col("split") === "train")
-    val (tcnt, pstats, mid, mstats, cstats, btot, vtot) =
-      trigramModelFrames(train)
-    val (qall, qpstats) = quadgramModelFrames(train, minCount4)
-    val qkept = qall.filter(col("c1234") >= minCount4)
-    val (pall, ppstats) = fivegramModelFrames(train, minCount5)
-    val pkept = pall.filter(col("c12345") >= minCount5)
-    val scored = tagged
-      .select(col("split"),
-        explode(wordShingles(tokens(col("text")), 5)).as("pg"))
-      .withColumn("t2", ngTok(col("pg"), 1))
-      .withColumn("t3", ngTok(col("pg"), 2))
-      .withColumn("t4", ngTok(col("pg"), 3))
-      .withColumn("t5", ngTok(col("pg"), 4))
-      .withColumn("pfx4", ngHead(col("pg"), 4))
-      .withColumn("sfx4", concat_ws(" ", col("t2"), col("t3"), col("t4"),
-        col("t5")))
-      .withColumn("sfx3", concat_ws(" ", col("t3"), col("t4"), col("t5")))
-      .join(pkept, Seq("pg"), "left")
-      .join(ppstats, col("pfx4") === col("p1234"), "left")
-      .join(qkept, col("sfx4") === col("qg"), "left")
-      .join(qpstats, concat_ws(" ", col("t2"), col("t3"), col("t4"))
-        === col("p123"), "left")
-      .join(tcnt, col("sfx3") === col("tg"), "left")
-      .join(pstats, concat_ws(" ", col("t3"), col("t4")) === col("p12"),
-        "left")
-      .join(mid, concat_ws(" ", col("t4"), col("t5")) === col("s23"), "left")
-      .join(mstats, col("t4") === col("mt2"), "left")
-      .join(cstats, col("t5") === col("ct3"), "left")
-      .crossJoin(broadcast(btot)).crossJoin(broadcast(vtot))
-    val bv = col("b") + col("v")
-    val denmid = lit(4L) * col("m2") * bv
-    val nummid = greatest(lit(4L) * coalesce(col("m23"), lit(0L)) - 3,
-      lit(0L)) * bv +
-      lit(3L) * col("t2types") * (coalesce(col("cont"), lit(0L)) + 1)
-    // the trigram ladder's branch-dependent rational on (t3 t4 t5) —
-    // lmHeldoutTrigram's three branches, as reusable columns
-    val den3 = when(col("c12").isNotNull, lit(4L) * col("c12") * denmid)
-      .when(col("m2").isNotNull, denmid)
-      .otherwise(bv)
-    val num3 = when(col("c12").isNotNull,
-        greatest(lit(4L) * coalesce(col("c123"), lit(0L)) - 3, lit(0L))
-          * denmid + lit(3L) * col("t12types") * nummid)
-      .when(col("m2").isNotNull, nummid)
-      .otherwise(coalesce(col("cont"), lit(0L)) + 1)
-    // the quadgram ladder stacked on it — lmHeldoutQuadgram's three
-    // branches on the suffix quadgram, as reusable columns
-    val den4 = when(col("c123k").isNotNull, lit(4L) * col("c123k") * den3)
-      .otherwise(den3)
-    val num4 = when(col("c123k").isNotNull,
-        when(col("c1234").isNotNull,
-          (lit(4L) * col("c1234") - 3) * den3 +
-            lit(3L) * col("t123types") * num3)
-          .otherwise(lit(3L) * col("t123types") * num3))
-      .otherwise(num3)
-    val rows = scored.select(col("split"),
-      col("c12345").isNull.as("unseen"),
-      // the fivegram guard with absent branch components coalesced to
-      // their bound-neutral 1 (den ≤ 256·c1234k·c123k·c12·m2·(B+V))
-      when(coalesce(col("c1234k"), lit(1L)).cast("double")
-          * coalesce(col("c123k"), lit(1L)).cast("double")
-          * coalesce(col("c12"), lit(1L)).cast("double")
-          * coalesce(col("m2"), lit(1L)).cast("double")
-          * bv.cast("double") >= lit(3.5e16d),
-        raise_error(lit("fivegram KN heldout: c1234k*c123k*c12*m2*(B+V) " +
-          ">= 3.5e16 overflows the exact int64 rational — rescale the " +
-          "rational before corpora this size")))
-        .otherwise(round((log(den4) - log(num4)) * lit(1000000.0d)))
-        .cast("long").as("s_quad"),
-      round((when(col("c1234k").isNotNull,
-          log(lit(4L) * col("c1234k") * den4)
-            - log(when(col("c12345").isNotNull,
-                (lit(4L) * col("c12345") - 3) * den4 +
-                  lit(3L) * col("t1234types") * num4)
-              .otherwise(lit(3L) * col("t1234types") * num4)))
-        .otherwise(log(den4) - log(num4)))
-        * lit(1000000.0d)).cast("long").as("s_five"))
-    val agg = rows.groupBy("split")
-      .agg(count(lit(1)).as("n_fivegrams"),
-        sum(when(col("unseen"), 1L).otherwise(0L)).as("unseen_fivegrams"),
-        sum(col("s_quad")).as("sq"), sum(col("s_five")).as("sf"))
-    def side(model: String, sumCol: String) = agg
-      .select(lit(model).as("model"), col("split"), col("n_fivegrams"),
-        col("unseen_fivegrams"),
-        expr(s"$sumCol div n_fivegrams").as("mean_micro"))
-    side("kn_quadgram", "sq").unionByName(side("kn_fivegram", "sf"))
-  }
-
-  def lmHeldoutFivegramQuery(spark: SparkSession, dir: String): DataFrame =
-    lmHeldoutFivegram(Tables.documents(spark, dir))
-      .orderBy(col("model"), col("split"))
 
   /** Token-distribution drift between two corpus slices — the
     * monitoring operator a continuously-crawled pipeline runs before
@@ -1678,13 +1074,8 @@ object QualityModels {
     * doc, then a 3-row split aggregate. */
   def lmHeldoutEval(docs: DataFrame, trainPct: Int = 80,
                     valPct: Int = 10): DataFrame = {
-    require(trainPct > 0 && valPct >= 0 && trainPct + valPct <= 100)
-    val trainT = 4294967296L * trainPct / 100
-    val valT = 4294967296L * (trainPct + valPct) / 100
     val tagged = docs.select(col("doc_id"), col("text"),
-      when(TextAnalysis.sampleBucket < trainT, "train")
-        .when(TextAnalysis.sampleBucket < valT, "val")
-        .otherwise("test").as("split"))
+      TextAnalysis.holdoutSplitCol(trainPct, valPct).as("split"))
     val toks = tagged.filter(col("split") === "train")
       .select(explode(tokens(col("text"))).as("t"))
     val vocab = toks.groupBy("t").agg(count(lit(1)).as("cnt"))
@@ -2097,7 +1488,7 @@ object QualityModels {
   /** The trigram-KN model CTE chain over a `tok(…, toks)` CTE the
     * caller defines — trigram stream/types, prefix stats, the middle
     * continuation table, continuation-unigram stats and the two
-    * scalars, mirroring [[trigramModelFrames]] frame for frame. */
+    * scalars: the order-3 ladder's tables (see [[knSurprisal]]). */
   private def trigramModelCtes(withDocId: Boolean): String = {
     val docCol = if (withDocId) "doc_id, " else ""
     s"""tgocc AS (
@@ -2202,7 +1593,7 @@ object QualityModels {
 
   /** Kept-prefix stats + per-type pruned-KN surprisal at one
     * threshold, as suffixed CTEs (qpre_θ, smap4_θ) — the pruned
-    * ladder's three branches mirror scoreQuadgramTypes exactly. */
+    * ladder's three branches at level 4. */
   private def quadgramScoreCtes(theta: Long): String =
     s"""qpre_$theta AS (
        | SELECT string_split(qg, ' ')[1] || ' ' || string_split(qg, ' ')[2] ||
@@ -2229,9 +1620,8 @@ object QualityModels {
 
   /** The pruned quadgram rational per seen type with the rounding
     * DEFERRED — (qg, den4, num4), the prefix-unkept branch folded to
-    * (den3, num3) — mirroring quadgramRationalTypes so the order-5
-    * oracle stacks on the same integers. Expects qall, qpre_θ and tsc
-    * in scope. */
+    * (den3, num3) — so the order-5 oracle stacks on the same
+    * integers. Expects qall, qpre_θ and tsc in scope. */
   private def quadgramRationalCtes(theta: Long): String =
     s"""qsc_$theta AS MATERIALIZED (
        | SELECT q.qg,
@@ -2267,7 +1657,7 @@ object QualityModels {
 
   /** Kept-prefix stats + per-type pruned order-5 surprisal at one
     * threshold (ppre_θ, smap5_θ) — the three branches mirror
-    * scoreFivegramTypes exactly, stacked on qsc_θ₄'s rational. */
+    * the ladder's level 5, stacked on qsc_θ₄'s rational. */
   private def fivegramScoreCtes(theta: Long, theta4: Long): String =
     s"""ppre_$theta AS (
        | SELECT string_split(pg, ' ')[1] || ' ' || string_split(pg, ' ')[2] ||

@@ -66,4 +66,11 @@ class VerifyOrderSpec extends SparkSpec {
       .sortBy { case (a, b) => (-b, a) }
     assert(got === want)
   }
+
+  test("unknownQueries names every comma-list entry that is not a query") {
+    assert(Verify.unknownQueries(None).isEmpty, "no list: dump everything")
+    assert(Verify.unknownQueries(Some(Set("lm_heldout_trigram",
+      "lm_heldout_trigarm", "kn_prune"))) === Seq("kn_prune",
+      "lm_heldout_trigarm"))
+  }
 }

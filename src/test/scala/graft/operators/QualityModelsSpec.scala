@@ -318,7 +318,7 @@ class QualityModelsSpec extends SparkSpec {
     // off the model tables; doc 4 has no trigram ⇒ 0/NULL)
     val d = Seq((1L, "a b c a b d"), (2L, "b c a"), (4L, "x y"))
       .toDF("doc_id", "text")
-    val out = QualityModels.trigramSurprisalKn(d)
+    val out = QualityModels.knSurprisal(d, 3)
       .select("doc_id", "n_trigrams", "surprisal_micro", "mean_micro")
       .as[(Long, Long, Long, Option[Long])].collect()
       .map(r => r._1 -> ((r._2, r._3, r._4))).toMap
@@ -334,10 +334,10 @@ class QualityModelsSpec extends SparkSpec {
     // seen; (b,c,q) seen context + unseen t3; (q,b,c) unseen context,
     // b a seen middle; (c,q,b) q never a middle ⇒ continuation
     // unigram. Expected means hand-derived from the train stats
-    // (B=4, V=4, see trigramModelFrames).
+    // (B=4, V=4 from the train split's bigram and token tables).
     val d = Seq((1L, "a b c a b d"), (2L, "b c a"), (3L, "a b c q b c"))
       .toDF("doc_id", "text")
-    val out = QualityModels.lmHeldoutTrigram(d)
+    val out = QualityModels.knHeldout(d, 3)
       .select("model", "split", "n_trigrams", "unseen_trigrams",
         "mean_micro")
       .as[(String, String, Long, Long, Long)].collect()
@@ -363,7 +363,7 @@ class QualityModelsSpec extends SparkSpec {
     val d = Seq((1L, "a b c a b d", "en"), (2L, "b c a", "de"),
         (4L, "x y", "en"))
       .toDF("doc_id", "text", "lang")
-    val means = QualityModels.trigramSurprisalKn(d)
+    val means = QualityModels.knSurprisal(d, 3)
       .select("doc_id", "mean_micro")
       .as[(Long, Option[Long])].collect().toMap
     val out = QualityModels.pplHistogram(d, bucketMicro = 500000L)
@@ -390,7 +390,7 @@ class QualityModelsSpec extends SparkSpec {
     // suffix trigram's exact KN rational. Doc 4 (2 tokens) ⇒ 0/NULL.
     val d = Seq((1L, "a b c d e"), (2L, "a b c d"), (3L, "a b c g"),
       (4L, "x y")).toDF("doc_id", "text")
-    val out = QualityModels.quadgramSurprisalKn(d, minCount = 2L)
+    val out = QualityModels.knSurprisal(d, 4, minCount4 = 2L)
       .select("doc_id", "n_quadgrams", "surprisal_micro", "mean_micro")
       .as[(Long, Long, Long, Option[Long])].collect()
       .map(r => r._1 -> ((r._2, r._3, r._4))).toMap
@@ -425,7 +425,7 @@ class QualityModelsSpec extends SparkSpec {
        "and degrades gracefully to the trigram ladder off-model") {
     val d = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
       .limit(200)
-    val out = QualityModels.lmHeldoutQuadgram(d)
+    val out = QualityModels.knHeldout(d, 4)
       .select("model", "split", "n_quadgrams", "unseen_quadgrams",
         "mean_micro")
       .as[(String, String, Long, Long, Long)].collect()
@@ -446,7 +446,7 @@ class QualityModelsSpec extends SparkSpec {
        "the order-5 train-split win") {
     val d = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
       .limit(200)
-    val out = QualityModels.lmHeldoutFivegram(d)
+    val out = QualityModels.knHeldout(d, 5)
       .select("model", "split", "n_fivegrams", "unseen_fivegrams",
         "mean_micro")
       .as[(String, String, Long, Long, Long)].collect()
@@ -465,87 +465,26 @@ class QualityModelsSpec extends SparkSpec {
 
   test("fivegramSurprisalKn: the order-5 pruned ladder replayed " +
        "independently with BigInt rationals") {
-    // An independent straight-line replay of the DOCUMENTED math (not
-    // the DataFrame code): n-gram stats as plain maps, every branch's
-    // exact rational in BigInt, one round to micro-nats — on a corpus
-    // that exercises all three order-5 branches (kept, pruned with
-    // kept prefix, prefix entirely pruned) plus the no-evidence doc.
+    // The replay below (KnReplay) recomputes the DOCUMENTED math, not
+    // the DataFrame code, on a corpus that exercises all three order-5
+    // branches (kept, pruned with kept prefix, prefix entirely pruned)
+    // plus the no-evidence doc.
     val corpus = Seq((1L, "a b c d e"), (2L, "a b c d e"),
       (3L, "a b c d f"), (4L, "b c d e f"), (5L, "x y"))
-    def grams(toks: Array[String], n: Int): Seq[String] =
-      if (toks.length < n) Seq.empty
-      else toks.sliding(n).map(_.mkString(" ")).toSeq
-    val docToks = corpus.map { case (id, t) => id -> t.split(" ") }
-    def counts(n: Int): Map[String, Long] = docToks
-      .flatMap { case (_, t) => grams(t, n) }
-      .groupBy(identity).map { case (g, o) => g -> o.size.toLong }
     val (theta4, theta5) = (2L, 2L)
-    val tcnt = counts(3)
-    val pstats = tcnt.groupBy(_._1.split(" ").take(2).mkString(" "))
-      .map { case (p, m) => p -> ((m.values.sum, m.size.toLong)) }
-    val mid = tcnt.keys.groupBy(_.split(" ").drop(1).mkString(" "))
-      .map { case (s, o) => s -> o.size.toLong }
-    val mstats = mid.groupBy(_._1.split(" ").head)
-      .map { case (t, m) => t -> ((m.values.sum, m.size.toLong)) }
-    val bcnt = counts(2)
-    val cstats = bcnt.keys.groupBy(_.split(" ")(1))
-      .map { case (t, o) => t -> o.size.toLong }
-    val bv = BigInt(bcnt.size) +
-      BigInt(docToks.flatMap(_._2).distinct.size)
-    def rat3(tg: String): (BigInt, BigInt) = {
-      val Array(_, t2, t3) = tg.split(" ")
-      val (c12, t12types) = pstats(tg.split(" ").take(2).mkString(" "))
-      val m23 = mid(tg.split(" ").drop(1).mkString(" "))
-      val (m2, t2types) = mstats(t2)
-      val denmid = BigInt(4) * m2 * bv
-      val nummid = (BigInt(4) * m23 - 3) * bv +
-        BigInt(3) * t2types * (cstats(t3) + 1)
-      (BigInt(4) * c12 * denmid,
-        (BigInt(4) * tcnt(tg) - 3) * denmid + BigInt(3) * t12types * nummid)
-    }
-    val qall = counts(4)
-    val qpre = qall.filter(_._2 >= theta4)
-      .groupBy(_._1.split(" ").take(3).mkString(" "))
-      .map { case (p, m) => p -> ((m.values.sum, m.size.toLong)) }
-    def rat4(qg: String): (BigInt, BigInt) = {
-      val (den3, num3) = rat3(qg.split(" ").drop(1).mkString(" "))
-      qpre.get(qg.split(" ").take(3).mkString(" ")) match {
-        case Some((c123k, t123types)) =>
-          (BigInt(4) * c123k * den3,
-            if (qall(qg) >= theta4)
-              (BigInt(4) * qall(qg) - 3) * den3 + BigInt(3) * t123types * num3
-            else BigInt(3) * t123types * num3)
-        case None => (den3, num3)
-      }
-    }
-    val pall = counts(5)
-    val ppre = pall.filter(_._2 >= theta5)
-      .groupBy(_._1.split(" ").take(4).mkString(" "))
-      .map { case (p, m) => p -> ((m.values.sum, m.size.toLong)) }
-    def s5(pg: String): Long = {
-      val (den4, num4) = rat4(pg.split(" ").drop(1).mkString(" "))
-      val (den, num) = ppre.get(pg.split(" ").take(4).mkString(" ")) match {
-        case Some((c1234k, t1234types)) =>
-          (BigInt(4) * c1234k * den4,
-            if (pall(pg) >= theta5)
-              (BigInt(4) * pall(pg) - 3) * den4 +
-                BigInt(3) * t1234types * num4
-            else BigInt(3) * t1234types * num4)
-        case None => (den4, num4)
-      }
-      math.round((math.log(den.toDouble) - math.log(num.toDouble)) * 1e6)
-    }
-    // the corpus hits all three branches — assert that, so a corpus
-    // edit can't silently hollow the test out
-    assert(ppre.contains("a b c d") && pall("a b c d f") < theta5 &&
-      !ppre.contains("b c d e"), "branch coverage lost")
+    val docToks = corpus.map { case (id, t) => id -> t.split(" ").toSeq }
+    val replay = new KnReplay(docToks.map(_._2), theta4, theta5)
     val expected = docToks.map { case (id, toks) =>
-      val ss = grams(toks, 5).map(s5)
+      val ss = KnReplay.grams(toks, 5).map(replay.micro(_, 5))
       id -> ((ss.size.toLong, ss.sum,
         if (ss.nonEmpty) Some(ss.sum / ss.size) else None))
     }.toMap
+    // the corpus hits all three branches — assert that, so a corpus
+    // edit can't silently hollow the test out
+    assert(Set((5, "kept"), (5, "zero"), (5, "pass")).subsetOf(replay.hits),
+      s"branch coverage lost: ${replay.hits}")
     val d = corpus.toDF("doc_id", "text")
-    val out = QualityModels.fivegramSurprisalKn(d, theta4, theta5)
+    val out = QualityModels.knSurprisal(d, 5, theta4, theta5)
       .select("doc_id", "n_fivegrams", "surprisal_micro", "mean_micro")
       .as[(Long, Long, Long, Option[Long])].collect()
       .map(r => r._1 -> ((r._2, r._3, r._4))).toMap
@@ -553,11 +492,144 @@ class QualityModelsSpec extends SparkSpec {
     assert(out(5L) === ((0L, 0L, None)))
   }
 
+  test("knHeldout: orders 3, 4 and 5 replayed with BigInt rationals, " +
+       "every unseen-context branch reached") {
+    // md5 split: ids 1, 2, 4, 6, 7 train, 5 val, 3 test. The test doc
+    // mixes seen stretches with the novel token q and the
+    // pruned-only context "x b c", so at every level the held-out
+    // positions reach a seen context, a seen context with an unseen
+    // (or pruned) n-gram, and an unseen context — down to the
+    // continuation floor of a token no bigram ends in.
+    val corpus = Seq((1L, "a b c d e f"), (2L, "a b c d e g"),
+      (4L, "b c d e f"), (6L, "x b c d z"), (7L, "a b c d e f"),
+      (5L, "a b c d e g"),
+      (3L, "a b c d e q b c d e f x b c d e q q"))
+    val split = corpus.map { case (id, _) => id -> KnReplay.splitOf(id) }.toMap
+    assert(split.values.toSet === Set("train", "val", "test"))
+    val docToks = corpus.map { case (id, t) => split(id) -> t.split(" ").toSeq }
+    val names = Map(2 -> "bigram", 3 -> "trigram", 4 -> "quadgram",
+      5 -> "fivegram")
+    val means = Seq(3, 4, 5).map { n =>
+      val replay = new KnReplay(
+        docToks.filter(_._1 == "train").map(_._2), 2L, 2L)
+      val positions = docToks.flatMap { case (sp, toks) =>
+        KnReplay.grams(toks, n).map(sp -> _) }
+      // coverage is judged on the test split's positions alone
+      positions.filter(_._1 == "test").foreach { case (_, g) =>
+        replay.micro(g, n) }
+      (2 to n).foreach { k =>
+        assert(Set((k, "kept"), (k, "zero"), (k, "pass"))
+          .subsetOf(replay.hits), s"order $n, level $k: ${replay.hits}")
+      }
+      assert(replay.hits.contains((1, "unseen")), "continuation floor")
+      val expected = for {
+        m <- Seq(n - 1, n)
+        (sp, ps) <- positions.groupBy(_._1)
+      } yield {
+        val ss = ps.map { case (_, g) => replay.micro(g.takeRight(m), m) }
+        (s"kn_${names(m)}", sp) -> ((ss.size.toLong,
+          ps.count(p => !replay.seen(p._2, n)).toLong, ss.sum / ss.size))
+      }
+      val out = QualityModels.knHeldout(corpus.toDF("doc_id", "text"), n)
+        .select("model", "split", s"n_${names(n)}s",
+          s"unseen_${names(n)}s", "mean_micro")
+        .as[(String, String, Long, Long, Long)].collect()
+        .map(r => (r._1, r._2) -> ((r._3, r._4, r._5))).toMap
+      assert(out === expected.toMap, s"order $n")
+      n -> out.collect { case ((m, "test"), v) => m -> v._3 }
+    }.toMap
+    // the replay is the reference; these pins catch a change that
+    // moves the replay and the ladder together
+    assert(means === Map(
+      3 -> Map("kn_bigram" -> 1154745L, "kn_trigram" -> 1242454L),
+      4 -> Map("kn_trigram" -> 1319528L, "kn_quadgram" -> 1419460L),
+      5 -> Map("kn_quadgram" -> 1519055L, "kn_fivegram" -> 1709050L)))
+  }
+
+  test("knGuard: each order's int64 bound passes just under and fails " +
+       "just over, naming the order") {
+    def msgs(t: Throwable): Seq[String] =
+      if (t == null) Seq.empty
+      else Option(t.getMessage).toSeq ++ msgs(t.getCause)
+    Seq(3 -> 570000000000L, 4 -> 140000000L, 5 -> 35000L).foreach {
+      case (n, atBound) =>
+        // context counts C_n … C_2 of 1000 each, then the level-1 base:
+        // the product crosses the bound between atBound − 1 and atBound
+        def guarded(base: Long) = spark.range(1).select(
+          QualityModels.knGuard("unit", n,
+            Seq.fill(n - 1)(lit(1000L)) :+ lit(base), lit(7L)))
+        assert(guarded(atBound - 1).as[Long].head() === 7L, s"order $n")
+        val ex = intercept[Exception](guarded(atBound).collect())
+        assert(msgs(ex).exists(_.contains(
+          s"unit: order-$n KN context product")), s"order $n: $ex")
+    }
+    // order 2 has no bound: its rational cannot approach int64
+    assert(spark.range(1).select(QualityModels.knGuard("unit", 2,
+      Seq(lit(Long.MaxValue), lit(Long.MaxValue)), lit(7L)))
+      .as[Long].head() === 7L)
+  }
+
+  test("bigramSurprisalKn: hand-computed rational formula on a tiny corpus") {
+    // corpus: "a b a b" and "b c" -> bigrams: (a b)x2, (b a)x1, (b c)x1
+    // prefix counts: a->2 (types 1), b->2 (types 2); unigrams:
+    // a:2 b:3 c:1, N=6, V=3
+    val d = Seq((1L, "a b a b", "s"), (2L, "b c", "s"))
+      .toDF("doc_id", "text", "source")
+    val out = QualityModels.knSurprisal(d, 2)
+      .select("doc_id", "n_bigrams", "surprisal_micro")
+      .as[(Long, Long, Long)].collect().map(r => r._1 -> r).toMap
+    def s(c12: Long, c1: Long, t1types: Long, u2: Long): Long = {
+      val nv = 6L + 3L
+      math.round((math.log((4L * c1 * nv).toDouble)
+        - math.log(((4L * c12 - 3L) * nv + 3L * t1types * (u2 + 1)).toDouble))
+        * 1.0e6)
+    }
+    val sAB = s(2, 2, 1, 3) // p(b|a): c12=2, c1=2, T1=1, u(b)=3
+    val sBA = s(1, 2, 2, 2) // p(a|b): c12=1, c1=2, T1=2, u(a)=2
+    val sBC = s(1, 2, 2, 1) // p(c|b): c12=1, c1=2, T1=2, u(c)=1
+    assert(out(1L) === ((1L, 3L, 2 * sAB + sBA)))
+    assert(out(2L) === ((2L, 1L, sBC)))
+  }
+
+  test("lmHeldoutBigram: backoff beats add-1 where V is large and test " +
+      "bigrams are seen-but-rare (the CCNet case)") {
+    // Every train doc carries the shared phrase PLUS five unique hapax
+    // words, blowing V up; held-out docs are the phrase alone. Add-1
+    // then crushes every seen phrase bigram toward 1/V while absolute
+    // discounting keeps p ≈ (c12 − D)/c1 — the measured reason CCNet
+    // gates with a backoff LM, demonstrated rather than asserted.
+    // (On the closed-vocab sf testdata both models see every test
+    // bigram and the split means differ only in noise — see NOTES_r14.)
+    val phrase = "the cat sat on the mat"
+    val docs = (0L until 200L).map { i =>
+      val text = if (KnReplay.splitOf(i) == "train")
+        s"$phrase u${i}a u${i}b u${i}c u${i}d u${i}e"
+      else phrase
+      (i, text, "s")
+    }.toDF("doc_id", "text", "source")
+    val rows = QualityModels.knHeldout(docs, 2)
+      .select("model", "split", "n_bigrams", "unseen_bigrams", "mean_micro")
+      .as[(String, String, Long, Long, Long)].collect()
+    assert(rows.map(_._1).distinct.sorted.toSeq
+      === Seq("add1", "backoff", "kn_cont"))
+    val byKey = rows.map(r => (r._1, r._2) -> r).toMap
+    val add1 = byKey(("add1", "test")); val kn = byKey(("backoff", "test"))
+    val knc = byKey(("kn_cont", "test"))
+    assert(add1._3 === kn._3 && add1._3 === knc._3,
+      "all models score the same bigram stream")
+    assert(add1._4 === 0L, "phrase bigrams are all seen in train")
+    assert(kn._5 * 3 < add1._5,
+      s"backoff (${kn._5}) must beat add-1 (${add1._5}) decisively " +
+        "on seen-but-rare bigrams under a large vocabulary")
+    assert(knc._5 * 3 < add1._5,
+      s"KN continuation backoff (${knc._5}) must beat add-1 too")
+  }
+
   test("trigramSurprisalKn: probability sanity — every seen trigram " +
        "surprisal is positive and interpolation beats pure backoff " +
        "mass-wise on repeated contexts") {
     val d = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    val out = QualityModels.trigramSurprisalKn(d.limit(50))
+    val out = QualityModels.knSurprisal(d.limit(50), 3)
       .select("n_trigrams", "surprisal_micro")
       .as[(Long, Long)].collect()
     out.filter(_._1 > 0).foreach { case (n, s) =>
@@ -595,5 +667,84 @@ class QualityModelsSpec extends SparkSpec {
   implicit private class Map2Ops(rows: Array[(Long, Long, Long, Long)]) {
     def toMap2: Map[Long, (Long, Long, Long)] =
       rows.map { case (k, a, b, c) => k -> ((a, b, c)) }.toMap
+  }
+}
+
+/** A straight-line BigInt replay of the documented Kneser-Ney ladder
+  * (QualityModels' ladder Scaladoc) over plain Scala maps, independent
+  * of the DataFrame code, for a model trained on `train`. `micro`
+  * scores one order-n position; `hits` records the (level, branch)
+  * pairs reached: "kept" (context seen, c ≥ 1 after pruning), "zero"
+  * (context seen, c = 0), "pass" (context unseen), and at level 1
+  * "seen"/"unseen" (continuation count present or not). */
+private final class KnReplay(train: Seq[Seq[String]], theta4: Long,
+    theta5: Long) {
+  import KnReplay.grams
+
+  private def counts(k: Int): Map[String, Long] = train
+    .flatMap(grams(_, k)).groupBy(_.mkString(" "))
+    .map { case (g, o) => g -> o.size.toLong }
+  private def context(g: String): String = g.split(" ").init.mkString(" ")
+  private def stats(m: Map[String, Long]): Map[String, (Long, Long)] =
+    m.groupBy(e => context(e._1))
+      .map { case (p, es) => p -> ((es.values.sum, es.size.toLong)) }
+
+  private val kept: Map[Int, Map[String, Long]] = (2 to 5).map { k =>
+    val th = if (k == 4) theta4 else if (k == 5) theta5 else 1L
+    k -> counts(k).filter(_._2 >= th)
+  }.toMap
+  private val ctx = kept.map { case (k, m) => k -> stats(m) }
+  // level-2 continuation counts: distinct left contexts in the trigrams
+  private val mid: Map[String, Long] = counts(3).keys.toSeq
+    .groupBy(_.split(" ").drop(1).mkString(" "))
+    .map { case (s, o) => s -> o.size.toLong }
+  private val midCtx = stats(mid)
+  private val cont: Map[String, Long] = counts(2).keys.toSeq
+    .groupBy(_.split(" ")(1)).map { case (t, o) => t -> o.size.toLong }
+  private val base = BigInt(counts(2).size) + BigInt(train.flatten.distinct.size)
+
+  val hits = scala.collection.mutable.Set.empty[(Int, String)]
+
+  def seen(pos: Seq[String], n: Int): Boolean =
+    kept(n).contains(pos.takeRight(n).mkString(" "))
+
+  def rational(pos: Seq[String], n: Int): (BigInt, BigInt) = {
+    val t = pos.last
+    hits += (1 -> (if (cont.contains(t)) "seen" else "unseen"))
+    (2 to n).foldLeft((base, BigInt(cont.getOrElse(t, 0L) + 1))) {
+      case ((den, num), k) =>
+        val key = pos.takeRight(k).mkString(" ")
+        val (cm, xm) = if (k == 2 && n >= 3) (mid, midCtx) else (kept(k), ctx(k))
+        xm.get(context(key)) match {
+          case Some((cc, tt)) =>
+            val c = cm.getOrElse(key, 0L)
+            hits += (k -> (if (c > 0) "kept" else "zero"))
+            (BigInt(4) * cc * den,
+              (BigInt(4) * c - 3).max(BigInt(0)) * den + BigInt(3) * tt * num)
+          case None =>
+            hits += (k -> "pass")
+            (den, num)
+        }
+    }
+  }
+
+  def micro(pos: Seq[String], n: Int): Long = {
+    val (den, num) = rational(pos, n)
+    math.round((math.log(den.toDouble) - math.log(num.toDouble)) * 1e6)
+  }
+}
+
+private object KnReplay {
+  def grams(toks: Seq[String], n: Int): Seq[Seq[String]] =
+    if (toks.length < n) Seq.empty else toks.sliding(n).toSeq
+
+  /** TextAnalysis.holdoutSplitCol(80, 10), replayed off the md5 bytes. */
+  def splitOf(id: Long): String = {
+    val md = java.security.MessageDigest.getInstance("MD5")
+      .digest(id.toString.getBytes("UTF-8"))
+    val b = java.lang.Long.parseLong(
+      md.take(4).map("%02x".format(_)).mkString, 16)
+    if (b < 4294967296L * 80 / 100) "train"
+    else if (b < 4294967296L * 90 / 100) "val" else "test"
   }
 }
